@@ -9,11 +9,16 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
+  /** Local cores to run on: `SPARK_GRAFT_CPUS` when set, else every
+    * processor the JVM sees. */
+  private def defaultCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
   /** Typed pipeline options (reference `defoptions` options.clj:23-44). */
   case class Config(
       appName: String = "graft",
-      master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]",
-      shufflePartitions: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt,
+      master: String = s"local[$defaultCpus]",
+      shufflePartitions: Int = defaultCpus,
       timeZone: String = "UTC",
       adaptive: Boolean = true,
       extraConf: Map[String, String] = Map.empty)

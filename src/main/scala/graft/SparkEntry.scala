@@ -397,7 +397,9 @@ object SparkEntry {
   def benchQueriesV3: Seq[String] =
     (queries.keySet -- benchQueries -- benchQueriesV2).toSeq.sorted
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** The query registry, built once: Bench, Verify and TimeQ look up
+    * one entry per query. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // -------- aggregation: combine per-key, sum/mean/min/max/count ----
     "q1_agg" -> ((s, dir) => {

@@ -873,10 +873,13 @@ object Corpus {
     * Dangling mass (nodes with no out-edges) redistributes uniformly
     * each round — rank mass is conserved (spec-asserted ≈ 1).
     *
-    * Shapes: per iteration one edge⋈rank join + per-target sum (all
+    * Shapes: the node table (with each node's dangling flag) and the
+    * edges joined with their source's out-degree are built once; per
+    * iteration one edge⋈rank join + per-target sum (all
     * partial-aggregated narrow rows) and a 1-row dangling-mass
-    * aggregate; rank state is lazily checkpointed per round (the
-    * components-loop recipe — flat lineage; sweep with
+    * aggregate broadcast into the round, so building the loop starts
+    * no per-round driver action; rank state is lazily checkpointed
+    * per round (the components-loop recipe — flat lineage; sweep with
     * `Dedup.releaseMaterialized`). Ranks ROUND to 12 decimals each
     * round: the per-target sum's fp order is engine/partitioning-
     * dependent and the rounding collapses it far below rank scale —
@@ -959,20 +962,17 @@ object Corpus {
       coalesce(avg(length(col("__n"))), lit(0.0))).head()
     val n = nstats.getLong(0).toDouble
     require(n > 0, "pageRank needs at least one non-null edge")
-    val outdeg = Dedup.materializeLazily(
-      e.groupBy("__s").agg(sum(col("__wt")).as("__deg")))
+    val outdeg = e.groupBy("__s").agg(sum(col("__wt")).as("__deg"))
     val hinted: DataFrame => DataFrame =
       if (stateBroadcastOk(n, nstats.getDouble(1), maxBroadcastNodes))
         df => broadcast(df)
       else df => df
-    var ranks = nodes.withColumn("__r", round(lit(1.0 / n), 12))
+    val (nodeTab, eDeg) = rankLoopSides(nodes, e, outdeg, hinted)
+    var ranks = nodeTab.withColumn("__r", round(lit(1.0 / n), 12))
     var it = 0
     while (it < iters) {
-      val dangling = ranks.join(hinted(outdeg), col("__n") === col("__s"),
-          "left_anti")
-        .agg(coalesce(sum(col("__r")), lit(0.0))).head().getDouble(0)
-      val contribs = e.join(hinted(ranks), col("__s") === col("__n"))
-        .join(hinted(outdeg), "__s")
+      val contribs = eDeg.join(hinted(ranks.select("__n", "__r")),
+          col("__s") === col("__n"))
         .select(col("__d").as("__n"),
           // (r / Σw) · w — with the default weight 1 the ×1.0 is an
           // IEEE no-op, so the historical unweighted values are
@@ -980,15 +980,40 @@ object Corpus {
           (col("__r") / col("__deg") * col("__wt")).as("__c"))
         .groupBy("__n").agg(sum(col("__c")).as("__in"))
       ranks = Dedup.materializeLazily(
-        nodes.join(hinted(contribs), Seq("__n"), "left")
-          .select(col("__n"),
+        withDanglingMass(nodeTab.join(hinted(contribs), Seq("__n"), "left"), ranks)
+          .select(col("__n"), col("__dang"),
             round(lit((1.0 - damping) / n) + lit(damping) *
-              (coalesce(col("__in"), lit(0.0)) + lit(dangling / n)), 12)
+              (coalesce(col("__in"), lit(0.0)) + col("__dm") / lit(n)), 12)
               .as("__r")))
       it += 1
     }
     ranks.select(col("__n").as("node"), col("__r").as("rank"))
   }
+
+  /** The loop-invariant sides of a [[pageRank]]-shaped loop, built once
+    * instead of every round: the node table (`__n` plus the other
+    * columns of `nodes`) left-joined with the out-degrees, carrying
+    * `__dang` (no out-edge), and the edges joined with their source's
+    * `__deg`. Both keep the row order of `nodes` and `e` (the state
+    * sides are broadcast under the guard), so the per-round sums run
+    * in the order they ran when every round redid these joins. */
+  private def rankLoopSides(nodes: DataFrame, e: DataFrame, outdeg: DataFrame,
+                            hinted: DataFrame => DataFrame): (DataFrame, DataFrame) = {
+    val deg = Dedup.materializeLazily(outdeg)
+    val nodeTab = Dedup.materializeLazily(
+      nodes.join(hinted(deg), col("__n") === col("__s"), "left")
+        .select(nodes.columns.map(col) :+ col("__deg").isNull.as("__dang"): _*))
+    (nodeTab, Dedup.materializeLazily(e.join(hinted(deg), "__s")))
+  }
+
+  /** `next` with `__dm`, the previous round's dangling rank mass —
+    * Σ`__r` over the `__dang` rows of `prev` — as a one-row aggregate
+    * broadcast-cross-joined into the round, so the round starts no
+    * driver action. The sum runs over `prev`'s rows in their stored
+    * order, as the driver-side sum it replaces did. */
+  private def withDanglingMass(next: DataFrame, prev: DataFrame): DataFrame =
+    next.crossJoin(broadcast(prev.where(col("__dang"))
+      .agg(coalesce(sum(col("__r")), lit(0.0)).as("__dm"))))
 
   /** Fixed-iteration HITS (Kleinberg 1999) hub/authority scores over a
     * link graph — the classic companion centrality to [[pageRank]]:
@@ -1003,7 +1028,7 @@ object Corpus {
     * L1 (sum) normalization instead of the textbook L2: identical
     * fixed point up to scale, but avoids a cross-engine sqrt on an
     * order-dependent sum of squares. Norm scalars are 1-row driver
-    * aggregates (the pageRank dangling-mass pattern).
+    * aggregates.
     *
     * Node-state sides broadcast under `maxBroadcastNodes` (the
     * [[pageRank]] recipe) so the constant edge table is never shuffled
@@ -2353,28 +2378,25 @@ object Corpus {
     val sCount = sd.count().toDouble
     require(sCount > 0,
       "personalizedPageRank needs >= 1 seed present in the graph")
-    val outdeg = Dedup.materializeLazily(
-      e.groupBy("__s").agg(count(lit(1)).as("__deg")))
-    val tele = Dedup.materializeLazily(
-      nodes.join(hinted(sd), col("__n") === col("__seed"), "left")
-        .select(col("__n"),
-          when(col("__seed").isNotNull, lit(1.0 / sCount))
-            .otherwise(lit(0.0)).as("__t")))
-    var ranks = tele.select(col("__n"), round(col("__t"), 12).as("__r"))
+    val outdeg = e.groupBy("__s").agg(count(lit(1)).as("__deg"))
+    val tele = nodes.join(hinted(sd), col("__n") === col("__seed"), "left")
+      .select(col("__n"),
+        when(col("__seed").isNotNull, lit(1.0 / sCount))
+          .otherwise(lit(0.0)).as("__t"))
+    val (nodeTab, eDeg) = rankLoopSides(tele, e, outdeg, hinted)
+    var ranks = nodeTab.select(col("__n"), col("__dang"),
+      round(col("__t"), 12).as("__r"))
     var it = 0
     while (it < iters) {
-      val dangling = ranks.join(hinted(outdeg), col("__n") === col("__s"),
-          "left_anti")
-        .agg(coalesce(sum(col("__r")), lit(0.0))).head().getDouble(0)
-      val contribs = e.join(hinted(ranks), col("__s") === col("__n"))
-        .join(hinted(outdeg), "__s")
+      val contribs = eDeg.join(hinted(ranks.select("__n", "__r")),
+          col("__s") === col("__n"))
         .select(col("__d").as("__n"), (col("__r") / col("__deg")).as("__c"))
         .groupBy("__n").agg(sum(col("__c")).as("__in"))
       ranks = Dedup.materializeLazily(
-        tele.join(hinted(contribs), Seq("__n"), "left")
-          .select(col("__n"),
+        withDanglingMass(nodeTab.join(hinted(contribs), Seq("__n"), "left"), ranks)
+          .select(col("__n"), col("__dang"),
             round(lit(1.0 - damping) * col("__t") + lit(damping) *
-              (coalesce(col("__in"), lit(0.0)) + lit(dangling / n)), 12)
+              (coalesce(col("__in"), lit(0.0)) + col("__dm") / lit(n)), 12)
               .as("__r")))
       it += 1
     }

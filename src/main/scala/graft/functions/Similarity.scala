@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.sources.GraftIO
 
 /** Approximate-nearest-neighbor similarity search over embedding
   * columns (`array<float>`) — north-star extension (SURVEY §7.2 step 7;
@@ -272,10 +273,10 @@ object Similarity {
   def ivfTopKIndexed(spark: org.apache.spark.sql.SparkSession, path: String,
                      queries: DataFrame, id: String, vec: String,
                      nprobe: Int, k: Int): DataFrame = {
-    val cents = spark.read.parquet(s"${path}__centroids")
+    val cents = GraftIO.readParquet(spark, s"${path}__centroids")
       .orderBy("cid").collect()
       .map(_.getSeq[Double](1).toArray)
-    probeScore(spark.read.parquet(path), queries, id, vec, cents, nprobe, k)
+    probeScore(GraftIO.readParquet(spark, path), queries, id, vec, cents, nprobe, k)
   }
 
   /** Exact embedding near-dup pairs: every (id_a < id_b) pair whose
@@ -1755,7 +1756,7 @@ object Similarity {
           s"${path}__model/opq.bin", "opq-rotation")
         queries.select(col(id), opqRotate(col(vec), rot).as(vec))
       } else queries
-    pqProbeScore(spark.read.parquet(path), qEff, id, vec, coarse, cb,
+    pqProbeScore(GraftIO.readParquet(spark, path), qEff, id, vec, coarse, cb,
       nprobe, k, residual)
   }
 }

@@ -2,6 +2,8 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.types.StructType
 
 /** Sources & sinks — reference §2.2 (datasplash core.clj:1178-1518 file
   * IO; bq.clj / datastore.clj / es.clj / pubsub.clj / kafka.clj
@@ -193,8 +195,63 @@ object GraftIO {
 
   // ---------------- parquet / tables (warehouse analog) ----------------
 
-  def readParquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+  /** Parquet read that infers a path's schema once per session.
+    * `spark.read.parquet` infers the schema with a footer-reading Spark
+    * job on every call, even for one file, so a session that reads the
+    * same tables again and again (every pass of a pipeline, every
+    * query of a vector index) paid one job per read. Here the first
+    * read of a path infers as Spark does; later reads pass the
+    * remembered schema (`spark.read.schema(s).parquet`), which starts
+    * no job and yields Spark's own column types.
+    *
+    * An entry is keyed by session (weakly; a stopped session's entries
+    * are dropped), path and a snapshot of the session's SQL conf, so a
+    * change to a conf the reader depends on (`nanosAsLong`,
+    * `binaryAsString`, `mergeSchema`, …) infers again. It records the
+    * leaf files (path, length, mtime) the schema was inferred from; a
+    * hit compares them with the listing the given-schema read has
+    * already made (no extra file-system call), and any difference — an
+    * overwrite, an added or removed file — infers again and replaces
+    * the entry. A file rewritten in place with the same length and
+    * mtime is not noticed. */
+  def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val key = (path, spark.conf.getAll)
+    val remembered = schemaMemo.synchronized(Option(sessionSchemas(spark).get(key)))
+    val hit = remembered.flatMap { m =>
+      val df = spark.read.schema(m.schema).parquet(path)
+      if (Bridge.leafFiles(df).contains(m.files)) Some(df) else None
+    }
+    hit.getOrElse {
+      val df = spark.read.parquet(path)
+      Bridge.leafFiles(df).foreach { files =>
+        schemaMemo.synchronized(sessionSchemas(spark).put(key, InferredSchema(df.schema, files)))
+      }
+      df
+    }
+  }
+
+  /** A schema Spark inferred, and the leaf files it was inferred from. */
+  private final case class InferredSchema(schema: StructType, files: Set[(String, Long, Long)])
+
+  private val schemaMemo = new java.util.WeakHashMap[SparkSession,
+    java.util.HashMap[(String, Map[String, String]), InferredSchema]]()
+
+  /** The session's entries, after dropping every stopped session's;
+    * the caller holds `schemaMemo`'s lock. */
+  private def sessionSchemas(spark: SparkSession) = {
+    schemaMemo.keySet.removeIf(_.sparkContext.isStopped)
+    schemaMemo.computeIfAbsent(spark, _ => new java.util.HashMap())
+  }
+
+  /** Paths whose schema the session has remembered, and the number of
+    * sessions holding entries (for specs). */
+  private[graft] def rememberedSchemaPaths(spark: SparkSession): Set[String] =
+    schemaMemo.synchronized {
+      import scala.jdk.CollectionConverters._
+      Option(schemaMemo.get(spark)).fold(Set.empty[String])(_.keySet.asScala.map(_._1).toSet)
+    }
+  private[graft] def rememberedSchemaSessions: Int =
+    schemaMemo.synchronized(schemaMemo.size)
 
   /** Read one of the driver's testdata tables from an sf dir,
     * normalizing the events timestamp to a stable two-column contract
@@ -209,7 +266,7 @@ object GraftIO {
     * DuckDB's naive epoch math even if a caller overrides
     * GraftSession's UTC default), and tz-adjusted timestamp µs. */
   def readTable(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$sfDir/$name.parquet")
+    val df = readParquet(spark, s"$sfDir/$name.parquet")
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
     name match {
       case "events" => df.schema("ts").dataType match {

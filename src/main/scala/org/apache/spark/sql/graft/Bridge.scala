@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
 
 /** Column ⇄ catalyst Expression bridge. Spark 4 made `Column`
   * implementation-agnostic; the classic converters are private[sql],
@@ -12,6 +13,23 @@ import org.apache.spark.sql.execution.LogicalRDD
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** The leaf files (path, length, modification time) of a DataFrame
+    * that is exactly one file-source relation, as its file index listed
+    * them when the DataFrame was created — no file-system call. None
+    * for any other plan shape. */
+  def leafFiles(df: DataFrame): Option[Set[(String, Long, Long)]] =
+    df.queryExecution.analyzed match {
+      case l: LogicalRelation => l.relation match {
+        case r: HadoopFsRelation => r.location match {
+          case i: PartitioningAwareFileIndex => Some(i.allFiles().iterator
+            .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toSet)
+          case _ => None
+        }
+        case _ => None
+      }
+      case _ => None
+    }
 
   /** RDD name applied by [[tagMaterialized]] so graft-internal
     * checkpoint blocks can be found and swept without touching any

@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.Corpus
+import graft.functions.{Corpus, Dedup}
+import org.apache.spark.sql.DataFrame
 
 class CorpusSpec extends AnyFunSuite {
   val spark = TestSpark.spark
@@ -1876,6 +1877,83 @@ class CorpusSpec extends AnyFunSuite {
         col("d"), seeds, iters = 2)
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     assert(rp == r2)
+  }
+
+  test("pageRank/personalizedPageRank: the dangling mass rides inside the " +
+      "round — a fixed number of build jobs per round, bit-equal to the " +
+      "driver-side form") {
+    // random multigraph with dangling nodes (ids >= 40 never appear as
+    // a source), weights 1-3, spread over several partitions
+    val rnd = new scala.util.Random(11)
+    val edges = Seq.fill(400)((rnd.nextInt(40).toString,
+      rnd.nextInt(60).toString, 1L + rnd.nextInt(3))).toDF("s", "d", "w")
+      .repartition(6)
+    val seeds = Seq("1", "7", "55").map(Tuple1(_)).toDF("n")
+    val runs = Seq[(String, Int => DataFrame, Int => DataFrame)](
+      ("pageRank",
+        i => Corpus.pageRank(edges, col("s"), col("d"), iters = i, weight = col("w")),
+        i => driverDanglingRank(edges, None, i, weighted = true)),
+      ("personalizedPageRank",
+        i => Corpus.personalizedPageRank(edges, col("s"), col("d"), seeds, iters = i),
+        i => driverDanglingRank(edges, Some(seeds), i, weighted = false)))
+    for ((name, build, reference) <- runs) {
+      // a per-round driver action brought back moves this increment
+      val perRound =
+        (TestSpark.jobsStarted(build(4))._2 - TestSpark.jobsStarted(build(2))._2) / 2.0
+      assert(perRound == PerRoundBuildJobs, s"$name: $perRound build jobs per round")
+      def bits(df: DataFrame) = df.collect()
+        .map(r => r.getString(0) -> java.lang.Double.doubleToRawLongBits(r.getDouble(1))).toMap
+      assert(bits(build(4)) == bits(reference(4)), name)
+    }
+    Dedup.releaseMaterialized(spark)
+  }
+
+  /** Build jobs each extra pageRank round starts: the query stages
+    * that lazily checkpointing the round's ranks runs (the previous
+    * ranks' broadcast, the contribution shuffle and its broadcast, the
+    * dangling-mass shuffle and its broadcast). The driver-side form
+    * started 7: its dangling-mass action added a job of its own and
+    * rebroadcast the out-degrees. */
+  private val PerRoundBuildJobs = 5.0
+
+  /** The pageRank / personalizedPageRank loop as it ran before the
+    * dangling mass moved into the round: every round re-joins the
+    * out-degrees and sums the dangling mass on the driver. */
+  private def driverDanglingRank(edges: DataFrame, seeds: Option[DataFrame],
+                                 iters: Int, weighted: Boolean,
+                                 damping: Double = 0.85): DataFrame = {
+    val e = Dedup.materializeLazily(edges.select(col("s").as("__s"),
+      col("d").as("__d"), (if (weighted) col("w") else lit(1L)).as("__wt")))
+    val nodes = Dedup.materializeLazily(
+      e.select(col("__s").as("__n")).union(e.select(col("__d").as("__n"))).distinct())
+    val n = nodes.count().toDouble
+    val outdeg = Dedup.materializeLazily(e.groupBy("__s").agg(
+      (if (weighted) sum(col("__wt")) else count(lit(1))).as("__deg")))
+    val tele = seeds.fold(nodes.withColumn("__t", lit(1.0 / n))) { sd =>
+      val s = sd.select(col("n").as("__seed")).distinct()
+        .join(nodes.select(col("__n").as("__seed")), Seq("__seed"), "left_semi")
+      val k = s.count().toDouble
+      Dedup.materializeLazily(nodes.join(broadcast(s), col("__n") === col("__seed"), "left")
+        .select(col("__n"), when(col("__seed").isNotNull, lit(1.0 / k))
+          .otherwise(lit(0.0)).as("__t")))
+    }
+    var ranks = tele.select(col("__n"), round(col("__t"), 12).as("__r"))
+    for (_ <- 1 to iters) {
+      val dangling = ranks.join(broadcast(outdeg), col("__n") === col("__s"), "left_anti")
+        .agg(coalesce(sum(col("__r")), lit(0.0))).head().getDouble(0)
+      val contribs = e.join(broadcast(ranks), col("__s") === col("__n"))
+        .join(broadcast(outdeg), "__s")
+        .select(col("__d").as("__n"),
+          (if (weighted) col("__r") / col("__deg") * col("__wt")
+           else col("__r") / col("__deg")).as("__c"))
+        .groupBy("__n").agg(sum(col("__c")).as("__in"))
+      val teleTerm = if (seeds.isEmpty) lit((1.0 - damping) / n)
+        else lit(1.0 - damping) * col("__t")
+      ranks = Dedup.materializeLazily(tele.join(broadcast(contribs), Seq("__n"), "left")
+        .select(col("__n"), round(teleTerm + lit(damping) *
+          (coalesce(col("__in"), lit(0.0)) + lit(dangling / n)), 12).as("__r")))
+    }
+    ranks
   }
 
   test("unigramShiftReport: hand-derived KL, OOV count, partition " +

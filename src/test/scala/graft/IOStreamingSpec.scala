@@ -23,6 +23,86 @@ class IOSpec extends AnyFunSuite {
     assert(new java.io.File(dir).listFiles().exists(_.getName.endsWith(".gz")))
   }
 
+  test("readParquet remembers an inferred schema: a second read of a table starts no job") {
+    val dir = tmp()
+    Seq((1L, "a"), (2L, "b")).toDF("k", "v").write.parquet(s"$dir/t.parquet")
+    val (first, inferJobs) = TestSpark.jobsStarted(GraftIO.readTable(spark, dir, "t"))
+    val (second, hitJobs) = TestSpark.jobsStarted(GraftIO.readTable(spark, dir, "t"))
+    assert(inferJobs >= 1, "the first read infers the schema with a Spark job")
+    assert(hitJobs == 0)
+    assert(GraftIO.rememberedSchemaPaths(spark)(s"$dir/t.parquet"))
+    assert(second.schema == first.schema)
+    assert(second.as[(Long, String)].collect().toSet == Set((1L, "a"), (2L, "b")))
+  }
+
+  test("readParquet: an overwrite with a different schema is read with the new schema") {
+    val path = tmp() + "/t"
+    Seq((1L, "a")).toDF("k", "v").write.parquet(path)
+    GraftIO.readParquet(spark, path)
+    assert(GraftIO.readParquet(spark, path).columns.toSeq == Seq("k", "v"))
+    Seq((2.5, 3, true)).toDF("x", "y", "z").write.mode("overwrite").parquet(path)
+    val after = GraftIO.readParquet(spark, path)
+    assert(after.columns.toSeq == Seq("x", "y", "z"))
+    assert(after.as[(Double, Int, Boolean)].collect().toSeq == Seq((2.5, 3, true)))
+  }
+
+  test("readParquet: a conf change between reads infers again (nanosAsLong, binaryAsString)") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    // parquet types whose Spark type depends on a conf: int64 nanos
+    // (a long only under nanosAsLong, else rejected) and unannotated
+    // binary (a string only under binaryAsString)
+    val dir = tmp()
+    val schema = MessageTypeParser.parseMessageType("message events { " +
+      "required int64 ts (TIMESTAMP(NANOS,true)); required binary tag; }")
+    val w = ExampleParquetWriter.builder(new org.apache.hadoop.fs.Path(s"$dir/events.parquet"))
+      .withType(schema).withConf(spark.sparkContext.hadoopConfiguration).build()
+    w.write(new SimpleGroupFactory(schema).newGroup()
+      .append("ts", 1700000000123456789L).append("tag", "x"))
+    w.close()
+    val nanos = "spark.sql.legacy.parquet.nanosAsLong"
+    val binStr = "spark.sql.parquet.binaryAsString"
+    val before = Seq(nanos, binStr).map(k => k -> spark.conf.getOption(k))
+    def events() = GraftIO.readTable(spark, dir, "events")
+    def tsNs() = events().select("ts_ns").as[Long].head()
+    try {
+      spark.conf.set(nanos, "true")
+      assert(tsNs() == 1700000000123456789L)
+      assert(tsNs() == 1700000000123456789L)
+      // Spark's own answer without nanosAsLong, not the remembered long
+      spark.conf.set(nanos, "false")
+      val e = intercept[org.apache.spark.sql.AnalysisException](events())
+      assert(e.getMessage.contains("PARQUET_TYPE_ILLEGAL"), e.getMessage)
+      spark.conf.set(nanos, "true")
+      assert(tsNs() == 1700000000123456789L)
+      import org.apache.spark.sql.types.{BinaryType, StringType}
+      spark.conf.set(binStr, "false")
+      assert(events().schema("tag").dataType == BinaryType)
+      spark.conf.set(binStr, "true")
+      assert(events().schema("tag").dataType == StringType)
+      assert(events().select("tag").as[String].head() == "x")
+    } finally before.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
+  }
+
+  test("readParquet: a stopped session's remembered schemas are not kept") {
+    import scala.jdk.CollectionConverters._
+    // in a child JVM: stopping the shared test session would end the suite
+    val jvm = java.lang.management.ManagementFactory.getRuntimeMXBean
+      .getInputArguments.asScala.filterNot(_.startsWith("-Xmx")).toSeq
+    val cmd = Seq(s"${System.getProperty("java.home")}/bin/java") ++ jvm ++
+      Seq("-Xmx1g", "-cp", System.getProperty("java.class.path"),
+        "graft.SchemaMemoStopCheck", tmp())
+    val err = new StringBuilder
+    val out = scala.sys.process.Process(cmd)
+      .!!(scala.sys.process.ProcessLogger(_ => (), l => err.append(l).append('\n')))
+    assert(out.linesIterator.contains("memo held=1 stopped=0 live=1 sessions=1"),
+      s"$out\n${err.takeRight(4000)}")
+  }
+
   test("model artifacts: versioned round-trips, kind/shape validation, merges parquet") {
     import graft.sources.ModelArtifacts
     val dir = tmp()

@@ -130,6 +130,10 @@ class ExtensionsRegistrySpec extends AnyFunSuite {
       "--appName=x", "--shufflePartitions=7", "--spark.foo=bar"))
     assert(cfg.appName == "x" && cfg.shufflePartitions == 7)
     assert(cfg.extraConf == Map("spark.foo" -> "bar"))
+    // cores: SPARK_GRAFT_CPUS when set, else every processor the JVM sees
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").fold(Runtime.getRuntime.availableProcessors)(_.toInt)
+    val default = GraftSession.Config()
+    assert(default.master == s"local[$cpus]" && default.shufflePartitions == cpus)
   }
 }
 

@@ -15,4 +15,28 @@ object TestSpark {
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.sql.extensions", "graft.plans.GraftExtensions")
     .getOrCreate()
+
+  /** `body`'s result and the number of Spark jobs it started (jobs of
+    * other threads, such as a stream left running, are not counted). */
+  def jobsStarted[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"jobs-started-${java.util.UUID.randomUUID()}"
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (j.properties != null && j.properties.getProperty("spark.jobGroup.id") == group)
+          n.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    sc.setJobGroup(group, "jobsStarted")
+    try {
+      val out = body
+      org.apache.spark.graft.ListenerDrain(sc)
+      (out, n.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(l)
+    }
+  }
 }
