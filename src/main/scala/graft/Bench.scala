@@ -18,9 +18,9 @@ object BenchCalibration {
     * scheduler noise doesn't dominate) — no files, no shuffle beyond
     * the final 1-row aggregate, identical every round by
     * construction. bit_xor, not sum: an ANSI long sum overflows. */
-  def calibrate(spark: SparkSession, cpus: Int): Double = {
+  def calibrate(spark: SparkSession): Double = {
     val t0 = System.nanoTime()
-    spark.range(0L, 6000000000L, 1L, cpus)
+    spark.range(0L, 6000000000L, 1L, spark.sparkContext.defaultParallelism)
       .selectExpr("bit_xor(xxhash64(id)) AS h")
       .write.format("noop").mode("overwrite").save()
     (System.nanoTime() - t0) / 1e9
@@ -34,17 +34,7 @@ object BenchCalibration {
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build()
     // ---- load context (r14, r13 verdict item 1) ----------------------
     // Two consecutive driver benches were load-skewed (r13 medians
     // 1.7x mins, five phantom regressions) and the artifact couldn't
@@ -55,7 +45,7 @@ object Bench {
     // round-over-round deltas only when calib_start/calib_end are
     // within ~1.3x of the clean-box reference recorded there.
     def loadAvg1m(): Double = BenchCalibration.loadAvg1m()
-    def calibrate(): Double = BenchCalibration.calibrate(spark, cpus.toInt)
+    def calibrate(): Double = BenchCalibration.calibrate(spark)
     // benchOverrides first: r10 converted three queries to supplied-
     // artifact oracle tiers; the bench keeps timing the trained
     // production tiers under the same names for series comparability

@@ -1015,6 +1015,17 @@ object Corpus {
     next.crossJoin(broadcast(prev.where(col("__dang"))
       .agg(coalesce(sum(col("__r")), lit(0.0)).as("__dm"))))
 
+  /** `next` with `__norm`, the sum of `raw`'s column `c`, as a one-row
+    * aggregate broadcast-cross-joined in (the [[withDanglingMass]]
+    * recipe), so a HITS round starts no driver action. A sum that is not
+    * positive fails the query with `vanished`. */
+  private def withNorm(next: DataFrame, raw: DataFrame, c: String,
+                       vanished: String): DataFrame = {
+    val total = coalesce(sum(col(c)), lit(0.0))
+    next.crossJoin(broadcast(raw.agg(
+      when(total > 0, total).otherwise(raise_error(lit(vanished))).as("__norm"))))
+  }
+
   /** Fixed-iteration HITS (Kleinberg 1999) hub/authority scores over a
     * link graph — the classic companion centrality to [[pageRank]]:
     * authority(v) = Σ hub(u) over in-edges, hub(u) = Σ authority(v)
@@ -1027,8 +1038,8 @@ object Corpus {
     * cost ∝ iters × edges with AQE handling hub-destination skew.
     * L1 (sum) normalization instead of the textbook L2: identical
     * fixed point up to scale, but avoids a cross-engine sqrt on an
-    * order-dependent sum of squares. Norm scalars are 1-row driver
-    * aggregates.
+    * order-dependent sum of squares. Norm scalars are one-row
+    * aggregates broadcast into the round, not driver actions.
     *
     * Node-state sides broadcast under `maxBroadcastNodes` (the
     * [[pageRank]] recipe) so the constant edge table is never shuffled
@@ -1054,10 +1065,10 @@ object Corpus {
     var auths = nodes.withColumn("__a", lit(0.0))
     var it = 0
     while (it < iters) {
-      // the raw sums MATERIALIZE before the norm-scalar action: the
-      // scalar head() and the normalized-state build would otherwise
-      // each recompute the edge⋈state join (measured ~2× round cost
-      // in the r10 bench read-through)
+      // the raw sums MATERIALIZE before the normalized-state build: the
+      // norm sum and the state join would otherwise each recompute the
+      // edge⋈state join (measured ~2× round cost in the r10 bench
+      // read-through)
       val aRaw = Dedup.materializeLazily(
         e.join(hinted(hubs), col("__s") === col("__n"))
           .groupBy(col("__d")).agg(sum(col("__h")).as("__ar")))
@@ -1065,23 +1076,19 @@ object Corpus {
       // nonzero hub the total is > 0; the guard is for an all-zero
       // degenerate round (cannot happen from the 1.0 init, kept for
       // API callers seeding their own state shape)
-      val aSum = aRaw.agg(coalesce(sum(col("__ar")), lit(0.0)))
-        .head().getDouble(0)
-      require(aSum > 0, "hits authority mass vanished (degenerate graph)")
       auths = Dedup.materializeLazily(
-        nodes.join(hinted(aRaw), col("__n") === col("__d"), "left")
+        withNorm(nodes.join(hinted(aRaw), col("__n") === col("__d"), "left"),
+            aRaw, "__ar", "hits authority mass vanished (degenerate graph)")
           .select(col("__n"),
-            round(coalesce(col("__ar"), lit(0.0)) / lit(aSum), 12).as("__a")))
+            round(coalesce(col("__ar"), lit(0.0)) / col("__norm"), 12).as("__a")))
       val hRaw = Dedup.materializeLazily(
         e.join(hinted(auths), col("__d") === col("__n"))
           .groupBy(col("__s")).agg(sum(col("__a")).as("__hr")))
-      val hSum = hRaw.agg(coalesce(sum(col("__hr")), lit(0.0)))
-        .head().getDouble(0)
-      require(hSum > 0, "hits hub mass vanished (degenerate graph)")
       hubs = Dedup.materializeLazily(
-        nodes.join(hinted(hRaw), col("__n") === col("__s"), "left")
+        withNorm(nodes.join(hinted(hRaw), col("__n") === col("__s"), "left"),
+            hRaw, "__hr", "hits hub mass vanished (degenerate graph)")
           .select(col("__n"),
-            round(coalesce(col("__hr"), lit(0.0)) / lit(hSum), 12).as("__h")))
+            round(coalesce(col("__hr"), lit(0.0)) / col("__norm"), 12).as("__h")))
       it += 1
     }
     hubs.join(hinted(auths), "__n")

@@ -29,9 +29,12 @@ object GraftIO {
     * `:empty-match-treatment` → `emptyMatchAllowed` (Beam's ALLOW /
     * DISALLOW; ALLOW_IF_WILDCARD dissolves — Spark globs match empty
     * silently, only fully-missing paths throw); `:many-files` (a
-    * Beam file-listing hint) is Spark-native — driver-side listing is
-    * already parallelized (`spark.sql.sources.parallelPartitionDiscovery
-    * .threshold`), no per-read flag needed. */
+    * Beam file-listing hint) needs no per-read flag: Spark lists more
+    * root paths than `spark.sql.sources.parallelPartitionDiscovery
+    * .threshold` (default 32) with a Spark job of one task per path,
+    * which pays off on a cluster over an object store; a session built
+    * by `GraftSession.build` with a local master lists every path on
+    * the driver instead (see `GraftSession.conf`). */
   def readTextFile(spark: SparkSession, paths: String*): Dataset[String] =
     spark.read.textFile(paths: _*)
 

@@ -27,7 +27,15 @@ object Sources {
     * micro-batch ingests, so a backlog drains in bounded-memory batches
     * instead of one giant catch-up batch. Termination (the reference's
     * `Watch.Growth` terminate-after strategy) is driver-side in Spark —
-    * see [[runFor]]. */
+    * see [[runFor]].
+    *
+    * Each micro-batch lists its new files as the root paths of a file
+    * index. A stream copies its session's SQL conf when it starts, so
+    * in a local session built by `GraftSession.build` a batch of any
+    * size lists on the driver; under Spark's default threshold a batch
+    * of more than 32 files starts a listing job of one task per file
+    * (0.8 s of a 64-file batch on a 4-core box, against 0.03 s on the
+    * driver). */
   def watchTextFiles(spark: SparkSession, path: String,
                      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     val r = spark.readStream
@@ -35,6 +43,7 @@ object Sources {
     r.text(path).toDF("line")
   }
 
+  /** [[watchTextFiles]] for parquet files of a known `schema`. */
   def watchParquet(spark: SparkSession, path: String,
                    schema: org.apache.spark.sql.types.StructType,
                    maxFilesPerTrigger: Option[Int] = None): DataFrame = {
@@ -135,7 +144,8 @@ object Sources {
     * messages `{payload, attributes{...}}` (the shape a Pub/Sub relay
     * would drop) and surface the reference message contract —
     * payload + attributes map + event time from a timestamp attribute
-    * (pubsub.clj:57-121 `:timestamp-label`). */
+    * (pubsub.clj:57-121 `:timestamp-label`). Batches list their files
+    * as [[watchTextFiles]] describes. */
   def watchMessages(spark: SparkSession, path: String,
                     timestampAttr: Option[String] = None,
                     maxFilesPerTrigger: Option[Int] = None): DataFrame = {

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: measure the Bench calibration query (the fixed
   * data-independent `bit_xor(xxhash64(id))` over a 6e9-row range —
   * graft.BenchCalibration, the single shared definition) a few times
@@ -9,16 +7,9 @@ import org.apache.spark.sql.SparkSession
   * README's "Bench noise" decision rule. Run on an idle machine. */
 object CalibProbe {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.build()
     def loadAvg1m(): Double = graft.BenchCalibration.loadAvg1m()
-    def calibrate(): Double =
-      graft.BenchCalibration.calibrate(spark, cpus.toInt)
+    def calibrate(): Double = graft.BenchCalibration.calibrate(spark)
     val n = if (args.nonEmpty) args(0).toInt else 5
     println(s"loadavg(1m)=${loadAvg1m()}")
     val times = (1 to n).map { i =>

@@ -1908,6 +1908,45 @@ class CorpusSpec extends AnyFunSuite {
     Dedup.releaseMaterialized(spark)
   }
 
+  test("hits: the norm sums ride inside the round — no driver action per round, " +
+      "a fixed number of build jobs per round") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val rnd = new scala.util.Random(5)
+    val edges = Seq.fill(300)((rnd.nextInt(40).toString, rnd.nextInt(50).toString))
+      .toDF("s", "d").repartition(5)
+    val heads = new java.util.concurrent.atomic.AtomicInteger
+    val l = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (f == "head") heads.incrementAndGet()
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    // (build jobs, driver `head` actions) of building `iters` rounds
+    def build(iters: Int): (Int, Int) = {
+      heads.set(0)
+      val jobs = TestSpark.jobsStarted(
+        Corpus.hits(edges, col("s"), col("d"), iters = iters))._2
+      (jobs, heads.get)
+    }
+    spark.listenerManager.register(l)
+    try {
+      val ((jobs2, heads2), (jobs4, heads4)) = (build(2), build(4))
+      // the node-count head() that picks the join strategy runs once
+      assert(heads2 == 1 && heads4 == 1, s"head actions: $heads2, $heads4")
+      assert((jobs4 - jobs2) / 2.0 == HitsPerRoundBuildJobs,
+        s"${(jobs4 - jobs2) / 2.0} build jobs per round")
+    } finally spark.listenerManager.unregister(l)
+    Dedup.releaseMaterialized(spark)
+  }
+
+  /** Build jobs each extra HITS round starts: the query stages that
+    * lazily checkpointing its four materialized sides runs. The two
+    * norm sums are a shuffle and a broadcast each; the driver-side
+    * `head()` sums they replace were a shuffle and a result job each,
+    * so the count did not change — what went is the driver round trip
+    * (see the head-action count above). */
+  private val HitsPerRoundBuildJobs = 10.0
+
   /** Build jobs each extra pageRank round starts: the query stages
     * that lazily checkpointing the round's ranks runs (the previous
     * ranks' broadcast, the contribution shuffle and its broadcast, the

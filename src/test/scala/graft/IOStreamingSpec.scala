@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.scalatest.funsuite.AnyFunSuite
@@ -33,6 +34,21 @@ class IOSpec extends AnyFunSuite {
     assert(GraftIO.rememberedSchemaPaths(spark)(s"$dir/t.parquet"))
     assert(second.schema == first.schema)
     assert(second.as[(Long, String)].collect().toSet == Set((1L, "a"), (2L, "b")))
+  }
+
+  test("local sessions list many paths on the driver; the conf still overrides it") {
+    val dir = tmp() + "/t"
+    spark.range(0, 40, 1, 40).selectExpr("id % 4 AS k", "id AS v").write.parquet(dir)
+    val files = new java.io.File(dir).listFiles().map(_.getPath)
+      .filter(_.endsWith(".parquet")).toSeq
+    assert(files.size == 40)
+    val schema = spark.read.parquet(dir).schema
+    def read() = spark.read.schema(schema).parquet(files: _*)
+    assert(TestSpark.jobsStarted(read())._2 == 0)
+    // Spark's default: more paths than this list with a job
+    TestSpark.withConf(GraftSession.ListingThresholdKey, "32") {
+      assert(TestSpark.jobsStarted(read())._2 >= 1)
+    }
   }
 
   test("readParquet: an overwrite with a different schema is read with the new schema") {
@@ -1059,6 +1075,55 @@ class StreamJoinSpec extends AnyFunSuite {
       assert(q.recentProgress.count(_.numInputRows > 0) == 3,
         q.recentProgress.map(_.numInputRows).mkString("batches: ", ",", ""))
     } finally if (q.isActive) q.stop()
+  }
+
+  test("file-watch batch of many files starts no listing job in a local session") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    val jobGroups = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(jobGroups.add)
+    }
+    // directories of 20 and 40 copies of one small parquet file
+    val src = spark.range(0, 8, 1, 1).selectExpr("id % 4 AS k", "id AS v")
+    val root = Files.createTempDirectory("graft-watch-many")
+    src.write.parquet(root.resolve("src").toString)
+    val file = Files.list(root.resolve("src")).iterator.asScala
+      .find(_.toString.endsWith(".parquet")).get
+    def copies(n: Int) = {
+      val dir = Files.createDirectory(root.resolve(s"in$n"))
+      for (i <- 0 until n) Files.copy(file, dir.resolve(f"f$i%02d.parquet"))
+      dir
+    }
+    val (dir20, dir40) = (copies(20), copies(40))
+    // the jobs of one micro-batch over every file of `dir`; a stream's
+    // jobs carry its run id as their job group
+    def batch(dir: java.nio.file.Path, name: String): Int = {
+      val q = graft.streaming.Sources.watchParquet(spark, dir.toString, src.schema)
+        .writeStream.format("memory").queryName(name)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+      try q.awaitTermination() finally if (q.isActive) q.stop()
+      org.apache.spark.graft.ListenerDrain(spark.sparkContext)
+      jobGroups.toArray.count(_ == q.runId.toString)
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val few = batch(dir20, "watch_many_20")
+      val many = batch(dir40, "watch_many_40")
+      assert(few > 0 && many == few, s"20 files: $few jobs, 40 files: $many jobs")
+      def agg(df: DataFrame) = df.groupBy($"k").agg(count(lit(1)), sum($"v"))
+        .as[(Long, Long, Long)].collect().toSet
+      assert(agg(spark.table("watch_many_40")) ==
+        agg(spark.read.schema(src.schema).parquet(dir40.toString)))
+      // Spark's default threshold (copied into the stream at start)
+      // brings the per-batch listing job back
+      val listed = TestSpark.withConf(GraftSession.ListingThresholdKey, "32") {
+        batch(dir40, "watch_many_40_listed")
+      }
+      assert(listed > few, s"40 files listed by a job: $listed jobs")
+    } finally spark.sparkContext.removeSparkListener(l)
   }
 
   test("runFor: terminate-after wall-clock budget stops an unbounded watch (core.clj:1207-1217)") {

@@ -135,6 +135,19 @@ class ExtensionsRegistrySpec extends AnyFunSuite {
     val default = GraftSession.Config()
     assert(default.master == s"local[$cpus]" && default.shufflePartitions == cpus)
   }
+
+  test("GraftSession.conf: local masters list files on the driver, cluster masters keep Spark's default") {
+    import GraftSession.{Config, ListingThresholdKey, conf}
+    def threshold(c: Config) = conf(c).toMap.get(ListingThresholdKey)
+    for (m <- Seq("local", "local[4]", "local[*]", "local[2,3]"))
+      assert(threshold(Config(master = m)).contains(Int.MaxValue.toString), m)
+    for (m <- Seq("spark://host:7077", "yarn", "local-cluster[2,1,1024]", "k8s://https://h:443"))
+      assert(threshold(Config(master = m)).isEmpty, m)
+    // a caller's value still wins, on either kind of master
+    val extra = Map(ListingThresholdKey -> "32")
+    assert(threshold(Config(master = "local[4]", extraConf = extra)).contains("32"))
+    assert(threshold(Config(master = "yarn", extraConf = extra)).contains("32"))
+  }
 }
 
 class ExamplesSpec extends AnyFunSuite {

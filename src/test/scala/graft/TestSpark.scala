@@ -5,16 +5,15 @@ import org.apache.spark.sql.SparkSession
 /** One shared local SparkSession for all suites (the TestPipeline
   * analog, reference testing.clj:24-28). */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.build(GraftSession.Config(
+    appName = "graft-test", master = "local[4]", shufflePartitions = 4))
+
+  /** `body` run with the session's SQL conf `key` set to `value`. */
+  def withConf[T](key: String, value: String)(body: => T): T = {
+    val old = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 
   /** `body`'s result and the number of Spark jobs it started (jobs of
     * other threads, such as a stream left running, are not counted). */
