@@ -873,28 +873,50 @@ object Corpus {
     * Dangling mass (nodes with no out-edges) redistributes uniformly
     * each round — rank mass is conserved (spec-asserted ≈ 1).
     *
-    * Shapes: the node table (with each node's dangling flag) and the
-    * edges joined with their source's out-degree are built once; per
-    * iteration one edge⋈rank join + per-target sum (all
-    * partial-aggregated narrow rows) and a 1-row dangling-mass
-    * aggregate broadcast into the round, so building the loop starts
-    * no per-round driver action; rank state is lazily checkpointed
-    * per round (the components-loop recipe — flat lineage; sweep with
-    * `Dedup.releaseMaterialized`). Ranks ROUND to 12 decimals each
-    * round: the per-target sum's fp order is engine/partitioning-
-    * dependent and the rounding collapses it far below rank scale —
-    * which is what lets a FIXED iteration count unroll into chained
-    * SQL CTEs and be oracle-checked exactly (q_pagerank; unlike
-    * k-means/BPE/logistic, this iterative op has a closed per-round
-    * relational form). Output: (node string, rank).
+    * Ranks ROUND to 12 decimals each round: the per-target sum's fp
+    * order is engine/partitioning-dependent and the rounding collapses
+    * it far below rank scale — which is what lets a FIXED iteration
+    * count unroll into chained SQL CTEs and be oracle-checked exactly
+    * (q_pagerank; unlike k-means/BPE/logistic, this iterative op has a
+    * closed per-round relational form). Output: (node string, rank).
     *
-    * When the node count is at most `maxBroadcastNodes`, the per-round
-    * rank/outdeg state sides are broadcast so the EDGE table — the big
-    * side, and constant across rounds — is never shuffled; only the
-    * per-target partial-aggregated sums move. The guard is row- AND
-    * byte-aware (avg key width from the same stats pass): above
-    * either cap every join falls back to the shuffled form, which is
-    * always correct. */
+    * Two loop shapes, picked by the size of the rank state. When the
+    * node count is at most `maxBroadcastNodes` and the row+byte guard
+    * ([[stateBroadcastOk]], avg key width from the same pass) admits
+    * it, the loop runs over DENSE node ids ([[denseRankLoop]]): the
+    * distinct node strings are collected once into an exact dictionary,
+    * the edges are encoded once into cached primitive arrays, and each
+    * round is ONE Spark job — every task adds its edges' contributions
+    * into a dense partial array, and the driver combines the partials
+    * in partition order and applies the rank update. The driver holds
+    * O(partitions × nodes) doubles per round, within the 256 MB state
+    * budget; nothing stays persisted after the call. Above either cap
+    * the shuffled SQL loop runs ([[shuffledRankLoop]]): the node table
+    * and `edges ⋈ outdeg` are built once, each round is one edge⋈rank
+    * join + per-target sum plus a one-row dangling-mass aggregate, and
+    * the rank state is checkpointed per round (sweep with
+    * `Dedup.releaseMaterialized`). Both shapes run the same double
+    * operations in the same order, except the order of the per-target
+    * and dangling-mass sums, which the rounding absorbs (bit-equality
+    * specs).
+    *
+    * Weighted-edge contract (r12 verdict item 6): `weight` defaults to
+    * 1 (bit-identical to the historical multigraph form — ×1.0 is an
+    * IEEE no-op); an explicit integer weight-w edge contributes
+    * exactly like w parallel edges (weighted out-degree = Σw, each
+    * edge's contribution = rank/Σw · w), spec-asserted against the
+    * replicated multigraph form. */
+  def pageRank(edges: DataFrame, src: Column, dst: Column,
+               iters: Int = 3, damping: Double = 0.85,
+               maxBroadcastNodes: Long = 8000000L,
+               weight: Column = lit(1L)): DataFrame = {
+    require(iters >= 1, s"iters $iters must be >= 1")
+    require(damping >= 0 && damping <= 1, s"damping $damping outside [0,1]")
+    rankLoop("pageRank", edges.select(src.cast("string").as("__s"),
+        dst.cast("string").as("__d"), weightGuard(weight, "pageRank").as("__wt")),
+      None, iters, damping, maxBroadcastNodes)
+  }
+
   /** Size-aware guard for the iteration-state broadcast hints: a row
     * cap alone would let wide string keys through (8M 200-char URL
     * nodes is ~1.6 GB per broadcast, rebuilt several times per
@@ -934,45 +956,216 @@ object Corpus {
       .otherwise(w)
   }
 
-  /** Weighted-edge contract (r12 verdict item 6): `weight` defaults to
-    * 1 (bit-identical to the historical multigraph form — ×1.0 is an
-    * IEEE no-op); an explicit integer weight-w edge contributes
-    * exactly like w parallel edges (weighted out-degree = Σw, each
-    * edge's contribution = rank/Σw · w), spec-asserted against the
-    * replicated multigraph form. */
-  def pageRank(edges: DataFrame, src: Column, dst: Column,
-               iters: Int = 3, damping: Double = 0.85,
-               maxBroadcastNodes: Long = 8000000L,
-               weight: Column = lit(1L)): DataFrame = {
-    require(iters >= 1, s"iters $iters must be >= 1")
-    require(damping >= 0 && damping <= 1, s"damping $damping outside [0,1]")
+  /** The [[pageRank]] / [[personalizedPageRank]] loop over `e` (`__s`,
+    * `__d` strings, `__wt` long weights; a row with a null end is
+    * dropped): the dense loop when the rank state fits the broadcast
+    * guard, else the shuffled loop. `seeds` None is pageRank's uniform
+    * teleport; Some is the seed set's first column. */
+  private def rankLoop(op: String, e: DataFrame, seeds: Option[DataFrame],
+                       iters: Int, damping: Double, maxRows: Long): DataFrame = {
+    val edges = e.where(col("__s").isNotNull && col("__d").isNotNull)
+    denseRankLoop(op, edges, seeds, iters, damping, maxRows)
+      .getOrElse(shuffledRankLoop(op, edges, seeds, iters, damping))
+  }
+
+  /** A partition of a rank loop's edges as parallel arrays: sources,
+    * targets, weights. */
+  private type EdgeBlock[K] = (Array[K], Array[K], Array[Long])
+  private type Utf8 = org.apache.spark.unsafe.types.UTF8String
+  private type Broadcast[T] = org.apache.spark.broadcast.Broadcast[T]
+  /** Byte order of the node strings: the dense id of a node is its
+    * position in the sorted dictionary. */
+  private val utf8Order: Ordering[Utf8] = Ordering.fromLessThan(_.compareTo(_) < 0)
+
+  /** The rank loop over dense node ids, or None when the rank state
+    * does not fit the broadcast guard. Jobs: one for the dictionary
+    * (the string edges are cached on the way), one to encode the
+    * edges and sum the out-degrees, one per seed set, then ONE per
+    * round. A round broadcasts q[u] = r[u] / deg[u]; each task adds
+    * q[src] · w into a dense partial array; the driver adds the partials
+    * in partition-index order and applies
+    * `round(base + d · (in + dm / n), 12)` — the double operations, in
+    * order, of the shuffled loop's SQL. The encoded edges keep at most
+    * 256 MB / 8n partitions, so the partials fit the same budget as the
+    * broadcast state. The output is built from the driver arrays; the
+    * cached edges and the broadcasts are released before returning. */
+  private def denseRankLoop(op: String, e: DataFrame, seeds: Option[DataFrame],
+                            iters: Int, damping: Double,
+                            maxRows: Long): Option[DataFrame] = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
+    import org.apache.spark.storage.StorageLevel
+    if (maxRows < 1) return None
+    val spark = e.sparkSession
+    val sc = spark.sparkContext
+    val strEdges = e.queryExecution.toRdd.mapPartitions { rows =>
+      val s, d = Array.newBuilder[Utf8]
+      val w = Array.newBuilder[Long]
+      rows.foreach { r =>
+        s += r.getUTF8String(0).clone(); d += r.getUTF8String(1).clone(); w += r.getLong(2)
+      }
+      Iterator[EdgeBlock[Utf8]]((s.result(), d.result(), w.result()))
+    }.persist(StorageLevel.MEMORY_AND_DISK)
+    try distinctNodes(strEdges, maxRows).map { keys =>
+      require(keys.nonEmpty, s"$op needs at least one non-null edge")
+      val n = keys.length
+      val dict = sc.broadcast(keys)
+      val parts = math.min(strEdges.getNumPartitions,
+        math.max(1, (maxStateBroadcastBytes / (8.0 * n)).toInt))
+      val enc = strEdges.coalesce(parts).mapPartitions { blocks =>
+        val ks = dict.value
+        def id(k: Utf8) = java.util.Arrays.binarySearch(ks, k, utf8Order)
+        val bs = blocks.toArray
+        val m = bs.map(_._3.length).sum
+        val (s, d, w) = (new Array[Int](m), new Array[Int](m), new Array[Long](m))
+        var j = 0
+        for ((bSrc, bDst, bW) <- bs; i <- bW.indices) {
+          s(j) = id(bSrc(i)); d(j) = id(bDst(i)); w(j) = bW(i); j += 1
+        }
+        Iterator[EdgeBlock[Int]]((s, d, w))
+      }.persist(StorageLevel.MEMORY_AND_DISK)
+      try {
+        val deg = new Array[Long](n)
+        sc.runJob(enc, (it: Iterator[EdgeBlock[Int]]) => {
+          val p = new Array[Long](n)
+          it.foreach { case (s, _, w) =>
+            s.indices.foreach(i => p(s(i)) = Math.addExact(p(s(i)), w(i)))
+          }
+          p
+        }).foreach(p => p.indices.foreach(u => deg(u) = Math.addExact(deg(u), p(u))))
+        strEdges.unpersist()
+        val tele = seeds.map(seedTeleport(op, _, dict))
+        val nD = n.toDouble
+        var r = Array.tabulate(n)(v => sqlRound(tele.fold(1.0 / nD)(_(v)), 12))
+        for (_ <- 1 to iters) {
+          val q = new Array[Double](n)
+          var dm = 0.0
+          for (u <- 0 until n) if (deg(u) == 0) dm += r(u) else q(u) = r(u) / deg(u).toDouble
+          val qb = sc.broadcast(q)
+          val in = new Array[Double](n)
+          try sc.runJob(enc, (it: Iterator[EdgeBlock[Int]]) => {
+            val q = qb.value
+            val acc = new Array[Double](n)
+            it.foreach { case (s, d, w) =>
+              var i = 0
+              while (i < s.length) { acc(d(i)) += q(s(i)) * w(i).toDouble; i += 1 }
+            }
+            acc
+          }).foreach(p => p.indices.foreach(v => in(v) += p(v)))
+          finally qb.destroy()
+          r = Array.tabulate(n) { v =>
+            val base = tele.fold((1.0 - damping) / nD)(t => (1.0 - damping) * t(v))
+            sqlRound(base + damping * (in(v) + dm / nD), 12)
+          }
+        }
+        val rows = keys.indices.map(v => Row(keys(v).toString, r(v)))
+        spark.createDataFrame(sc.parallelize(rows, sc.defaultParallelism),
+          StructType(Seq(StructField("node", StringType), StructField("rank", DoubleType))))
+      } finally {
+        enc.unpersist()
+        dict.destroy()
+      }
+    } finally strEdges.unpersist()
+  }
+
+  /** The teleport vector of personalized PageRank over the dense ids
+    * in `dict`: 1/k on each of the k distinct seeds (the first column of
+    * `seeds`) present in the graph, 0 elsewhere. One job. */
+  private def seedTeleport(op: String, seeds: DataFrame,
+                           dict: Broadcast[Array[Utf8]]): Array[Double] = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    val n = dict.value.length
+    val hit = new java.util.BitSet(n)
+    seeds.sparkSession.sparkContext.runJob(
+      seeds.select(col(seeds.columns.head).cast("string")).queryExecution.toRdd,
+      (it: Iterator[InternalRow]) => {
+        val ks = dict.value
+        val b = new java.util.BitSet(n)
+        it.foreach { r =>
+          if (!r.isNullAt(0)) {
+            val i = java.util.Arrays.binarySearch(ks, r.getUTF8String(0), utf8Order)
+            if (i >= 0) b.set(i)
+          }
+        }
+        b
+      }).foreach(hit.or)
+    val k = hit.cardinality.toDouble
+    require(k > 0, s"$op needs >= 1 seed present in the graph")
+    Array.tabulate(n)(v => if (hit.get(v)) 1.0 / k else 0.0)
+  }
+
+  /** The distinct node strings of `edges`, sorted by [[utf8Order]], or
+    * None when they exceed the [[stateBroadcastOk]] guard. One job. A
+    * task stops collecting once its partition passes its share of the
+    * byte budget (which also sends that graph to the shuffled loop), so
+    * a node table over the cap never reaches the driver. */
+  private def distinctNodes(edges: org.apache.spark.rdd.RDD[EdgeBlock[Utf8]],
+                            maxRows: Long): Option[Array[Utf8]] = {
+    val keys = edges.flatMap { case (s, d, _) => s.iterator ++ d.iterator }.distinct()
+    val share = maxStateBroadcastBytes / keys.getNumPartitions
+    val parts = edges.sparkContext.runJob(keys, (it: Iterator[Utf8]) => {
+      val out = Array.newBuilder[Utf8]
+      var bytes = 0.0
+      while (it.hasNext && bytes <= share) {
+        val k = it.next()
+        out += k
+        bytes += k.numChars + 48.0
+      }
+      if (bytes <= share) Some(out.result()) else None
+    })
+    if (parts.contains(None)) None
+    else {
+      val all = parts.flatten.flatten
+      val chars = all.iterator.map(_.numChars.toDouble).sum
+      if (all.nonEmpty && !stateBroadcastOk(all.length, chars / all.length, maxRows)) None
+      else Some(all.sorted(utf8Order))
+    }
+  }
+
+  /** Spark's `round(x, scale)` of a double, on the driver: HALF_UP on
+    * the shortest decimal representation; NaN and infinities pass
+    * through. */
+  private[graft] def sqlRound(x: Double, scale: Int): Double =
+    if (x.isNaN || x.isInfinite) x
+    else java.math.BigDecimal.valueOf(x).setScale(scale, java.math.RoundingMode.HALF_UP)
+      .doubleValue()
+
+  /** The rank loop as shuffled SQL, for a rank state over the broadcast
+    * guard: see [[pageRank]]. */
+  private def shuffledRankLoop(op: String, edges: DataFrame, seeds: Option[DataFrame],
+                               iters: Int, damping: Double): DataFrame = {
     // materializeLazily branches to a RELIABLE checkpoint when the
     // session has a checkpoint dir (executor loss mid-loop must not
     // kill the job — the components-loop recipe); outdeg materializes
     // too: it is consumed twice per round, and rebuilding the edge
     // aggregation 2·iters times was a review catch
-    val e = Dedup.materializeLazily(
-      edges.select(src.cast("string").as("__s"), dst.cast("string").as("__d"),
-          weightGuard(weight, "pageRank").as("__wt"))
-        .where(col("__s").isNotNull && col("__d").isNotNull))
+    val e = Dedup.materializeLazily(edges)
     val nodes = Dedup.materializeLazily(
       e.select(col("__s").as("__n")).union(e.select(col("__d").as("__n")))
         .distinct())
-    val nstats = nodes.agg(count(lit(1)),
-      coalesce(avg(length(col("__n"))), lit(0.0))).head()
-    val n = nstats.getLong(0).toDouble
-    require(n > 0, "pageRank needs at least one non-null edge")
+    val n = nodes.count().toDouble
+    require(n > 0, s"$op needs at least one non-null edge")
+    // pageRank teleports uniformly; personalized PageRank to its seeds
+    val (tele, base, r0) = seeds match {
+      case None => (nodes, lit((1.0 - damping) / n), round(lit(1.0 / n), 12))
+      case Some(s) =>
+        val sd = Dedup.materializeLazily(
+          s.select(col(s.columns.head).cast("string").as("__seed"))
+            .where(col("__seed").isNotNull).distinct()
+            .join(nodes.select(col("__n").as("__seed")), Seq("__seed"), "left_semi"))
+        val sCount = sd.count().toDouble
+        require(sCount > 0, s"$op needs >= 1 seed present in the graph")
+        (nodes.join(sd, col("__n") === col("__seed"), "left")
+          .select(col("__n"), when(col("__seed").isNotNull, lit(1.0 / sCount))
+            .otherwise(lit(0.0)).as("__t")),
+          lit(1.0 - damping) * col("__t"), round(col("__t"), 12))
+    }
     val outdeg = e.groupBy("__s").agg(sum(col("__wt")).as("__deg"))
-    val hinted: DataFrame => DataFrame =
-      if (stateBroadcastOk(n, nstats.getDouble(1), maxBroadcastNodes))
-        df => broadcast(df)
-      else df => df
-    val (nodeTab, eDeg) = rankLoopSides(nodes, e, outdeg, hinted)
-    var ranks = nodeTab.withColumn("__r", round(lit(1.0 / n), 12))
+    val (nodeTab, eDeg) = rankLoopSides(tele, e, outdeg)
+    var ranks = nodeTab.select(col("__n"), col("__dang"), r0.as("__r"))
     var it = 0
     while (it < iters) {
-      val contribs = eDeg.join(hinted(ranks.select("__n", "__r")),
-          col("__s") === col("__n"))
+      val contribs = eDeg.join(ranks.select("__n", "__r"), col("__s") === col("__n"))
         .select(col("__d").as("__n"),
           // (r / Σw) · w — with the default weight 1 the ×1.0 is an
           // IEEE no-op, so the historical unweighted values are
@@ -980,9 +1173,9 @@ object Corpus {
           (col("__r") / col("__deg") * col("__wt")).as("__c"))
         .groupBy("__n").agg(sum(col("__c")).as("__in"))
       ranks = Dedup.materializeLazily(
-        withDanglingMass(nodeTab.join(hinted(contribs), Seq("__n"), "left"), ranks)
+        withDanglingMass(nodeTab.join(contribs, Seq("__n"), "left"), ranks)
           .select(col("__n"), col("__dang"),
-            round(lit((1.0 - damping) / n) + lit(damping) *
+            round(base + lit(damping) *
               (coalesce(col("__in"), lit(0.0)) + col("__dm") / lit(n)), 12)
               .as("__r")))
       it += 1
@@ -990,27 +1183,24 @@ object Corpus {
     ranks.select(col("__n").as("node"), col("__r").as("rank"))
   }
 
-  /** The loop-invariant sides of a [[pageRank]]-shaped loop, built once
+  /** The loop-invariant sides of the shuffled rank loop, built once
     * instead of every round: the node table (`__n` plus the other
     * columns of `nodes`) left-joined with the out-degrees, carrying
     * `__dang` (no out-edge), and the edges joined with their source's
-    * `__deg`. Both keep the row order of `nodes` and `e` (the state
-    * sides are broadcast under the guard), so the per-round sums run
-    * in the order they ran when every round redid these joins. */
-  private def rankLoopSides(nodes: DataFrame, e: DataFrame, outdeg: DataFrame,
-                            hinted: DataFrame => DataFrame): (DataFrame, DataFrame) = {
+    * `__deg`. */
+  private def rankLoopSides(nodes: DataFrame, e: DataFrame,
+                            outdeg: DataFrame): (DataFrame, DataFrame) = {
     val deg = Dedup.materializeLazily(outdeg)
     val nodeTab = Dedup.materializeLazily(
-      nodes.join(hinted(deg), col("__n") === col("__s"), "left")
+      nodes.join(deg, col("__n") === col("__s"), "left")
         .select(nodes.columns.map(col) :+ col("__deg").isNull.as("__dang"): _*))
-    (nodeTab, Dedup.materializeLazily(e.join(hinted(deg), "__s")))
+    (nodeTab, Dedup.materializeLazily(e.join(deg, "__s")))
   }
 
   /** `next` with `__dm`, the previous round's dangling rank mass —
     * Σ`__r` over the `__dang` rows of `prev` — as a one-row aggregate
     * broadcast-cross-joined into the round, so the round starts no
-    * driver action. The sum runs over `prev`'s rows in their stored
-    * order, as the driver-side sum it replaces did. */
+    * driver action. */
   private def withDanglingMass(next: DataFrame, prev: DataFrame): DataFrame =
     next.crossJoin(broadcast(prev.where(col("__dang"))
       .agg(coalesce(sum(col("__r")), lit(0.0)).as("__dm"))))
@@ -2352,7 +2542,11 @@ object Corpus {
     * form profiles ≥ 1.26e-16 at sf0.01 / ≥ 4.2e-17 at sf0.1, both
     * ≥ ~1e4 ulps of their values, the q_pagerank safety band.)
     * Same per-round round(…, 12) + unrolled-CTE oracle recipe and the
-    * same broadcast-guarded loop shapes as [[pageRank]]. In a graph
+    * same two loop shapes as [[pageRank]]: over dense node ids, one
+    * Spark job per round, while the rank state fits the broadcast
+    * guard; the shuffled SQL loop above it. The seed set is read in
+    * one more job (dense) or intersected by a semi-join (shuffled);
+    * every edge has weight 1. In a graph
     * with NO reachable dangling mass, nodes unreachable from the
     * seeds in ≤ `iters` hops hold rank exactly 0.0 (there is no
     * uniform term to leak them mass); once dm > 0 every node is
@@ -2363,51 +2557,9 @@ object Corpus {
                            maxBroadcastNodes: Long = 8000000L): DataFrame = {
     require(iters >= 1, s"iters $iters must be >= 1")
     require(damping >= 0 && damping <= 1, s"damping $damping outside [0,1]")
-    val e = Dedup.materializeLazily(
-      edges.select(src.cast("string").as("__s"), dst.cast("string").as("__d"))
-        .where(col("__s").isNotNull && col("__d").isNotNull))
-    val nodes = Dedup.materializeLazily(
-      e.select(col("__s").as("__n")).union(e.select(col("__d").as("__n")))
-        .distinct())
-    val nstats = nodes.agg(count(lit(1)),
-      coalesce(avg(length(col("__n"))), lit(0.0))).head()
-    val n = nstats.getLong(0).toDouble
-    require(n > 0, "personalizedPageRank needs at least one non-null edge")
-    val hinted: DataFrame => DataFrame =
-      if (stateBroadcastOk(n, nstats.getDouble(1), maxBroadcastNodes))
-        df => broadcast(df)
-      else df => df
-    val sd = Dedup.materializeLazily(
-      seeds.select(col(seeds.columns.head).cast("string").as("__seed"))
-        .where(col("__seed").isNotNull).distinct()
-        .join(nodes.select(col("__n").as("__seed")), Seq("__seed"),
-          "left_semi"))
-    val sCount = sd.count().toDouble
-    require(sCount > 0,
-      "personalizedPageRank needs >= 1 seed present in the graph")
-    val outdeg = e.groupBy("__s").agg(count(lit(1)).as("__deg"))
-    val tele = nodes.join(hinted(sd), col("__n") === col("__seed"), "left")
-      .select(col("__n"),
-        when(col("__seed").isNotNull, lit(1.0 / sCount))
-          .otherwise(lit(0.0)).as("__t"))
-    val (nodeTab, eDeg) = rankLoopSides(tele, e, outdeg, hinted)
-    var ranks = nodeTab.select(col("__n"), col("__dang"),
-      round(col("__t"), 12).as("__r"))
-    var it = 0
-    while (it < iters) {
-      val contribs = eDeg.join(hinted(ranks.select("__n", "__r")),
-          col("__s") === col("__n"))
-        .select(col("__d").as("__n"), (col("__r") / col("__deg")).as("__c"))
-        .groupBy("__n").agg(sum(col("__c")).as("__in"))
-      ranks = Dedup.materializeLazily(
-        withDanglingMass(nodeTab.join(hinted(contribs), Seq("__n"), "left"), ranks)
-          .select(col("__n"), col("__dang"),
-            round(lit(1.0 - damping) * col("__t") + lit(damping) *
-              (coalesce(col("__in"), lit(0.0)) + col("__dm") / lit(n)), 12)
-              .as("__r")))
-      it += 1
-    }
-    ranks.select(col("__n").as("node"), col("__r").as("rank"))
+    rankLoop("personalizedPageRank", edges.select(src.cast("string").as("__s"),
+        dst.cast("string").as("__d"), lit(1L).as("__wt")),
+      Some(seeds), iters, damping, maxBroadcastNodes)
   }
 
   /** Domain-shift report between two slices of one corpus: the

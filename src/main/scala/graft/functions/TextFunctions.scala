@@ -2498,10 +2498,13 @@ object TextFunctions {
     * list (a `transform` over index `sequence` — docs shorter than 2
     * tokens are filtered BEFORE the sequence so it can never run
     * descending), then the [[graft.functions.Corpus.pageRank]]
-    * machinery (edge table never re-shuffled across rounds, per-round
-    * round(12) → unrolled-CTE oracle). Vocabulary is Zipf-small
-    * relative to the corpus, so the rank state always fits the
-    * broadcast guard. Output: (node = token, rank). */
+    * machinery (per-round round(12) → unrolled-CTE oracle).
+    * Vocabulary is Zipf-small relative to the corpus, so the rank state
+    * fits the broadcast guard and pageRank takes its dense path: the
+    * tokens are collected once into a dictionary, the pair list is
+    * encoded once into cached int arrays, and each round is one Spark
+    * job; a vocabulary over the guard runs pageRank's shuffled SQL
+    * loop instead. Output: (node = token, rank). */
   def textRankKeywords(df: DataFrame, text: Column,
                        iters: Int = 3): DataFrame = {
     val d = df.select(tokens(text).as("__tk"))

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: A/B the ngramDiversity expand — distinct-counting the
   * gram STRING (current) vs distinct-counting `xxhash64(gram)` built
@@ -11,10 +10,7 @@ import org.apache.spark.sql.SparkSession
 object DiversityProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.build()
     spark.sparkContext.setLogLevel("ERROR")
     import graft.functions.TextFunctions
 

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool: profile the OPH minhash estimator against the exact
@@ -15,11 +14,7 @@ object EstProbe {
     // DuckDB at sf0.1 than through the Spark quadratic oracle form,
     // so the recall comparison runs outside this JVM.
     if (args.headOption.contains("dump")) { dumpCandidates(args(1), args(2)); return }
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
+    val spark = graft.GraftSession.build()
     spark.sparkContext.setLogLevel("ERROR")
     import graft.functions.Dedup
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
@@ -46,11 +41,7 @@ object EstProbe {
   }
 
   def dumpCandidates(sfDir: String, outDir: String): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
+    val spark = graft.GraftSession.build()
     spark.sparkContext.setLogLevel("ERROR")
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     graft.functions.Dedup.minhashLshPairs(docs, "doc_id", "text", 5, 128, 16,

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: one-off timings of queries named on the command line at
   * an sf dir (default sf0.1) — 3 runs each after a warmup, min
@@ -11,14 +10,7 @@ object NewQueryProbe {
     val names = if (args.nonEmpty) args.toSeq else Seq(
       "q_quality_model", "q_bigram_logprob", "q_snapshot_neardup",
       "q_pack_corpus", "q_bpe_tokens", "q_lang_id_ngram", "q_mix_upsample")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
+    val spark = graft.GraftSession.build()
     spark.sparkContext.setLogLevel("ERROR")
     for (n <- names) {
       val runs = (0 to 3).map { _ =>

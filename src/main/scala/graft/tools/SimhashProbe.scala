@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool: simhash pigeonhole bucket-size distribution + A/B timing
@@ -11,11 +10,7 @@ import org.apache.spark.sql.functions._
 object SimhashProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
+    val spark = graft.GraftSession.build()
     spark.sparkContext.setLogLevel("ERROR")
     import graft.functions.Dedup
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")

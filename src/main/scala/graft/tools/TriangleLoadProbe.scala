@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev tool: q_triangles is the only query that blew up 4-10x under
@@ -28,11 +28,7 @@ object TriangleLoadProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val hog = args.length > 1 && args(1) == "hog"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
+    val spark = graft.GraftSession.build()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     import graft.functions.{Corpus, Dedup}

@@ -1882,6 +1882,8 @@ class CorpusSpec extends AnyFunSuite {
   test("pageRank/personalizedPageRank: the dangling mass rides inside the " +
       "round — a fixed number of build jobs per round, bit-equal to the " +
       "driver-side form") {
+    // the fixed numbers: 1 per round over dense ids, the checkpointed
+    // SQL round's stages on the shuffled path
     // random multigraph with dangling nodes (ids >= 40 never appear as
     // a source), weights 1-3, spread over several partitions
     val rnd = new scala.util.Random(11)
@@ -1889,23 +1891,74 @@ class CorpusSpec extends AnyFunSuite {
       rnd.nextInt(60).toString, 1L + rnd.nextInt(3))).toDF("s", "d", "w")
       .repartition(6)
     val seeds = Seq("1", "7", "55").map(Tuple1(_)).toDF("n")
-    val runs = Seq[(String, Int => DataFrame, Int => DataFrame)](
-      ("pageRank",
-        i => Corpus.pageRank(edges, col("s"), col("d"), iters = i, weight = col("w")),
-        i => driverDanglingRank(edges, None, i, weighted = true)),
-      ("personalizedPageRank",
-        i => Corpus.personalizedPageRank(edges, col("s"), col("d"), seeds, iters = i),
-        i => driverDanglingRank(edges, Some(seeds), i, weighted = false)))
-    for ((name, build, reference) <- runs) {
-      // a per-round driver action brought back moves this increment
-      val perRound =
-        (TestSpark.jobsStarted(build(4))._2 - TestSpark.jobsStarted(build(2))._2) / 2.0
-      assert(perRound == PerRoundBuildJobs, s"$name: $perRound build jobs per round")
-      def bits(df: DataFrame) = df.collect()
-        .map(r => r.getString(0) -> java.lang.Double.doubleToRawLongBits(r.getDouble(1))).toMap
-      assert(bits(build(4)) == bits(reference(4)), name)
+    // (path, node cap, build jobs per round): a cap of 0 forces the
+    // shuffled loop
+    val paths = Seq(("dense", 8000000L, DenseRoundJobs),
+      ("shuffled", 0L, ShuffledRoundJobs))
+    for ((path, cap, perRoundJobs) <- paths) {
+      val runs = Seq[(String, Int => DataFrame, Int => DataFrame)](
+        ("pageRank",
+          i => Corpus.pageRank(edges, col("s"), col("d"), iters = i,
+            maxBroadcastNodes = cap, weight = col("w")),
+          i => driverDanglingRank(edges, None, i, weighted = true)),
+        ("personalizedPageRank",
+          i => Corpus.personalizedPageRank(edges, col("s"), col("d"), seeds,
+            iters = i, maxBroadcastNodes = cap),
+          i => driverDanglingRank(edges, Some(seeds), i, weighted = false)))
+      for ((name, build, reference) <- runs) {
+        // a per-round driver action or a per-round checkpoint brought
+        // back moves this increment
+        val perRound =
+          (TestSpark.jobsStarted(build(4))._2 - TestSpark.jobsStarted(build(2))._2) / 2.0
+        assert(perRound == perRoundJobs, s"$name/$path: $perRound build jobs per round")
+        def bits(df: DataFrame) = df.collect()
+          .map(r => r.getString(0) -> java.lang.Double.doubleToRawLongBits(r.getDouble(1))).toMap
+        assert(bits(build(4)) == bits(reference(4)), s"$name/$path")
+      }
     }
     Dedup.releaseMaterialized(spark)
+  }
+
+  test("pageRank over dense ids: the output does not depend on the edge " +
+      "partitioning, and nothing stays persisted") {
+    val rnd = new scala.util.Random(23)
+    val edges = Seq.fill(500)((rnd.nextInt(70).toString,
+      rnd.nextInt(90).toString, 1L + rnd.nextInt(4))).toDF("s", "d", "w")
+    def bits(df: DataFrame) = df.collect()
+      .map(r => r.getString(0) -> java.lang.Double.doubleToRawLongBits(r.getDouble(1))).toMap
+    val sc = spark.sparkContext
+    val outs = Seq(1, 5, 13).map { p =>
+      // checked right after the call: Spark keeps persisted RDDs by weak
+      // reference, so a leaked one could vanish from the map after a GC
+      val before = sc.getPersistentRDDs.keySet
+      val ranks = Corpus.pageRank(edges.repartition(p), col("s"), col("d"),
+        iters = 4, weight = col("w"))
+      assert(sc.getPersistentRDDs.keySet == before, sc.getPersistentRDDs.toString)
+      bits(ranks)
+    }
+    assert(outs.distinct.size == 1, "outputs differ across 1 / 5 / 13 partitions")
+    assert(outs.head.size == edges.select("s").union(edges.select("d")).distinct().count())
+  }
+
+  test("sqlRound matches Spark's round(x, 12) on columns (codegen) and " +
+      "literals (eval), half-way values included") {
+    val rnd = new scala.util.Random(3)
+    // random magnitudes around rank scale, and k·1e-12 + 5e-13: values
+    // whose shortest decimal form ends exactly on the HALF_UP boundary
+    val xs = Seq.fill(100000)(rnd.nextDouble() * math.pow(10, -rnd.nextInt(8))) ++
+      (0 until 2000).map(_ => rnd.nextInt(1000000000) * 1e-12 + 5e-13) ++
+      Seq(0.0, 1.0, 5e-13, 1.5e-12, Double.NaN, Double.PositiveInfinity)
+    val got = xs.toDF("x").select(col("x"), round(col("x"), 12))
+      .collect().map(r => (r.getDouble(0), r.getDouble(1)))
+    assert(got.length == xs.length)
+    for ((x, r) <- got) assert(
+      java.lang.Double.doubleToRawLongBits(Corpus.sqlRound(x, 12)) ==
+        java.lang.Double.doubleToRawLongBits(r), s"round($x, 12): $r vs ${Corpus.sqlRound(x, 12)}")
+    for (x <- xs.take(200) ++ xs.takeRight(200)) {
+      val r = spark.range(1).select(round(lit(x), 12)).head().getDouble(0)
+      assert(java.lang.Double.doubleToRawLongBits(Corpus.sqlRound(x, 12)) ==
+        java.lang.Double.doubleToRawLongBits(r), s"round(lit($x), 12)")
+    }
   }
 
   test("hits: the norm sums ride inside the round — no driver action per round, " +
@@ -1947,13 +2000,18 @@ class CorpusSpec extends AnyFunSuite {
     * (see the head-action count above). */
   private val HitsPerRoundBuildJobs = 10.0
 
-  /** Build jobs each extra pageRank round starts: the query stages
-    * that lazily checkpointing the round's ranks runs (the previous
-    * ranks' broadcast, the contribution shuffle and its broadcast, the
-    * dangling-mass shuffle and its broadcast). The driver-side form
-    * started 7: its dangling-mass action added a job of its own and
-    * rebroadcast the out-degrees. */
-  private val PerRoundBuildJobs = 5.0
+  /** Build jobs each extra pageRank round starts over dense ids: the
+    * round's one job, which adds every partition's contributions into a
+    * dense partial array. The SQL loop's lazily checkpointed round
+    * started 5. */
+  private val DenseRoundJobs = 1.0
+
+  /** Build jobs each extra round of the shuffled SQL loop starts: the
+    * query stages that lazily checkpointing the round's ranks runs with
+    * no state side broadcast-hinted (the shuffles of both sides of the
+    * edge⋈rank join and of the node⋈contribution join, the per-target
+    * sum, the dangling-mass aggregate and its broadcast). */
+  private val ShuffledRoundJobs = 8.0
 
   /** The pageRank / personalizedPageRank loop as it ran before the
     * dangling mass moved into the round: every round re-joins the
