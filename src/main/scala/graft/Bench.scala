@@ -84,7 +84,7 @@ object Bench {
     // would hand it whatever late-session drift/load exists (the
     // interleaved min below is position-robust by construction — it
     // spreads each query's iterations across the whole session). The
-    // r8 probe (tools/BenchABProbe, bench/abprobe_r8.txt) measured
+    // r8 probe (bench/abprobe_r8.txt) measured
     // interleaved mins 1.47x b2b mins in one ABBA-counterbalanced JVM
     // — per-query warm shuffle/JIT/page-cache state — which fully
     // explains the r6->r7 "+15%" phantom regression. Quote

@@ -36,7 +36,7 @@ object SparkEntry {
     * groupBy collecting each order's sorted parts + in-place pair
     * emission (Dedup.pairsFromSorted, the LSH-bucket shape) —
     * multiset-equal to the historical lineitem self-join
-    * (tools/PairBuildProbe: `except` diff 0 rows both raw and
+    * (PairBuildProbe@afd7ec7: `except` diff 0 rows both raw and
     * weighted; a sorted multiset's after-position not-equal emission
     * ≡ the join's `a.l_partkey < b.l_partkey` product, duplicate
     * (order, part) rows contribute the same m·n) at ONE shuffle of
@@ -50,7 +50,7 @@ object SparkEntry {
     li.where(col("l_orderkey").isNotNull && col("l_partkey").isNotNull)
       .groupBy(col("l_orderkey"))
       .agg(sort_array(collect_list(col("l_partkey"))).as("__is"))
-      .select(explode(Dedup.pairsFromSortedPublic(col("__is"))).as("__p"))
+      .select(explode(Dedup.pairsFromSorted(col("__is"))).as("__p"))
       .select(col("__p.id_a").as("u"), col("__p.id_b").as("v"))
 
   /** [[coPurchasePairs]] aggregated to the ≥2-shared-order weighted
@@ -2766,7 +2766,7 @@ object SparkEntry {
     // Same recipe as q_strip_repeats plus a second pass with blocks
     // carved from token offset 5 — catches repeated runs that straddle
     // a phase-0 block boundary (4.7% of deletable tokens at sf0.1,
-    // measured by tools/StrideProbe).
+    // measured by StrideProbe@afd7ec7).
     "q_strip_stride" -> ((s, dir) => {
       import s.implicits._
       Dedup.stripRepeatedBlocks(t(s, dir, "documents"), "doc_id", "text",
@@ -3509,7 +3509,7 @@ object SparkEntry {
     // for the three dialect-exactness choices). The trained-k-means
     // kernelized production tier (pqAdcTopKReranked) stays covered by
     // the SimilaritySpec exact-on-reconstruction property + pinned
-    // tools/PqProbe recall floors, and stays timed in Bench via
+    // PqProbe recall floors (bench/pqprobe_r8.txt), and stays timed in Bench via
     // benchOverrides. Normalization rides the one-pass L2Normalize
     // kernel (casts each element to double BEFORE multiplying, the
     // SQL's x::DOUBLE form — float-multiply-then-widen would diverge

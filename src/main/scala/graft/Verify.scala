@@ -8,9 +8,7 @@ object Verify {
     // the dump to named queries (local iteration; the driver passes 2)
     val sfDir = args(0); val outDir = args(1)
     val only: Set[String] = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val spark = GraftSession.build(GraftSession.Config(
-      master = s"local[$cpus]", shufflePartitions = cpus))
+    val spark = GraftSession.build()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }

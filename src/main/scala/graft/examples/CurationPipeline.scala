@@ -1,6 +1,6 @@
 package graft.examples
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.{Corpus, Dedup, TextFunctions}
@@ -177,13 +177,8 @@ object CurationPipeline {
   def main(args: Array[String]): Unit = {
     val in = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = args.drop(1).headOption.getOrElse("/tmp/graft_curated")
-    val spark = SparkSession.builder().master("local[*]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.build(graft.GraftSession.Config(
+      shufflePartitions = 32))
     val docs = graft.sources.GraftIO.readTable(spark, in, "documents")
     // stand-in benchmark: every 50th doc (the q_decontaminate fixture rule)
     val benchmark = docs.where(col("doc_id") % 50 === 0)

@@ -1,6 +1,6 @@
 package graft.examples
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.{Corpus, TextFunctions}
@@ -61,10 +61,8 @@ object TrainingExport {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outDir = args.lift(1).getOrElse("/tmp/graft-export")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.build(graft.GraftSession.Config(
+      master = "local[4]", shufflePartitions = 4))
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text"), col("source"))
     export(docs, outDir, weights = Map("src0" -> 2.0), numMerges = 32)

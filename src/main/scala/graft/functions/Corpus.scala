@@ -927,8 +927,8 @@ object Corpus {
     * id-like keys; the fallback on a miss is the always-correct
     * shuffled join. */
   private val maxStateBroadcastBytes: Double = (256L << 20).toDouble
-  private def stateBroadcastOk(rows: Double, avgKeyChars: Double,
-                               maxRows: Long): Boolean =
+  private[functions] def stateBroadcastOk(rows: Double, avgKeyChars: Double,
+                                          maxRows: Long): Boolean =
     rows <= maxRows.toDouble &&
       rows * (avgKeyChars + 48.0) <= maxStateBroadcastBytes
 
@@ -1296,75 +1296,27 @@ object Corpus {
     * the q_triangles oracle replay with the naive id orientation.
     *
     * DEFAULT = the edge-iterator intersect form (see
-    * [[triangleCountsIntersect]]): r11 probe (`tools/TriangleProbe`,
-    * `bench/triangleprobe_r11.txt`) measured it 1.45× faster warm on
+    * [[triangleCountsIntersect]]): the r11 probe
+    * (`bench/triangleprobe_r11.txt`) measured it 1.45× faster warm on
     * the real co-purchase workload (8.4 → 5.8 s standalone sf0.1,
-    * 1.2M edges / 1.88M triangles, identical outputs) and its
-    * above-cap fallback shuffles O(m) rows where the wedge form
-    * shuffles Σ outdeg² ≈ m^1.5. The wedge pipeline is retained as
-    * [[triangleCountsWedge]] for re-probes. */
+    * 1.2M edges / 1.88M triangles, identical outputs) than the wedge
+    * self-join form, and its above-cap fallback shuffles O(m) rows
+    * where the wedge form shuffles Σ outdeg² ≈ m^1.5. The wedge form
+    * is kept in test scope as the differential reference
+    * (`ReferenceForms.triangleCountsWedge`). */
   def triangleCounts(edges: DataFrame, src: Column, dst: Column,
                      maxBroadcastCloseEdges: Long = 8000000L): DataFrame =
     triangleCountsIntersect(edges, src, dst, maxBroadcastCloseEdges)
 
-  /** Wedge-join triangle form (the r10 default; superseded as default
-    * by the intersect form in r11 — kept behind the same output
-    * contract for probes): degree orientation (Suri & Vassilvitskii
-    * 2011), wedges from ONE self-equi-join of the oriented list on
-    * the apex (Σ outdeg² rows, bounded by the O(√m) orientation
-    * out-degree), closed by ONE more equi-join. Each triangle
-    * materializes exactly once (at its lowest-rank apex), then
-    * explodes to its 3 corners.
-    *
-    * The closing join's SMALL side is the oriented edge list (m rows)
-    * and its BIG side is the wedge set; the materialized oriented
-    * table carries no size stats, so left alone Catalyst
-    * sort-merge-joins — shuffling every wedge. When the edge count
-    * (known after materialization) passes the row cap
-    * `maxBroadcastCloseEdges` AND the byte estimate, the closing side
-    * is broadcast, keeping the wedge set inside its producing stage.
-    * Above the cap it falls back to the shuffled semi-join —
-    * always correct, but Σ outdeg² rows on the wire (the reason the
-    * intersect form is now the default). */
-  def triangleCountsWedge(edges: DataFrame, src: Column, dst: Column,
-                          maxBroadcastCloseEdges: Long = 8000000L): DataFrame = {
-    val oriented = orientEdges(edges, src, dst)
-    val w1 = oriented.select(col("__f"), col("__t").as("__b"),
-      col("__dt").as("__db"))
-    val w2 = oriented.select(col("__f"), col("__t").as("__c"),
-      col("__dt").as("__dc"))
-    // the count() is cheap (oriented is already materialized) and
-    // decides broadcast vs shuffle for the wedge + closing joins; a
-    // broadcastable edge list turns the whole wedge→close→explode
-    // pipeline into ONE stage with no wedge-row shuffle
-    val keyWidthW =
-      if (oriented.schema("__f").dataType ==
-          org.apache.spark.sql.types.StringType)
-        coalesce(avg(length(col("__f")) + length(col("__t"))), lit(0.0))
-      else lit(16.0)
-    val estats = oriented.agg(count(lit(1)), keyWidthW).head()
-    val small = stateBroadcastOk(estats.getLong(0).toDouble,
-      estats.getDouble(1), maxBroadcastCloseEdges)
-    def hinted(df: DataFrame) = if (small) broadcast(df) else df
-    val wedges = w1.join(hinted(w2), "__f")
-      .where(struct(col("__db"), col("__b")) < struct(col("__dc"), col("__c")))
-    val closing = oriented.select(col("__f").as("__b"), col("__t").as("__c"))
-    val tris = wedges.join(hinted(closing), Seq("__b", "__c"), "left_semi")
-      .select(col("__f"), col("__b"), col("__c"))
-    tris.select(explode(array(col("__f"), col("__b"), col("__c"))).as("node"))
-      .groupBy(col("node")).agg(count(lit(1)).as("triangles"))
-      // long-path boundary cast (no-op on the string path)
-      .select(col("node").cast("string").as("node"), col("triangles"))
-  }
-
   /** Canonicalize + degree-orient an undirected edge list (shared by
-    * both triangle forms): self-loops dropped, directions/duplicates
-    * merged, every edge pointed from its lower-(degree, node)
-    * endpoint — an acyclic orientation with O(√m) max out-degree.
-    * Materialized (it feeds 2+ joins downstream); carries the target
-    * degree `__dt` for the wedge form's ordering filter. */
-  private def orientEdges(edges: DataFrame, src: Column,
-                          dst: Column): DataFrame = {
+    * the intersect form and its test-scope wedge reference):
+    * self-loops dropped, directions/duplicates merged, every edge
+    * pointed from its lower-(degree, node) endpoint — an acyclic
+    * orientation with O(√m) max out-degree. Materialized (it feeds 2+
+    * joins downstream); carries the target degree `__dt` for the wedge
+    * reference's ordering filter. */
+  private[functions] def orientEdges(edges: DataFrame, src: Column,
+                                     dst: Column): DataFrame = {
     // Auto key type: both triangle forms' outputs are
     // orientation-invariant (see integralEndpoints), so the long path
     // is sound here; callers cast `node` back to string at the output
@@ -1387,7 +1339,7 @@ object Corpus {
   /** True when both endpoint columns are integral — the LONG-keyed
     * canonical path applies (r15 optimization): half the shuffle
     * bytes and 8-byte compares through the distinct/degree/adjacency
-    * machinery vs UTF-8 strings (tools/GraphKeyProbe: 20–45% per
+    * machinery vs UTF-8 strings (GraphKeyProbe@afd7ec7: 20–45% per
     * stage on the sf0.1 co-purchase graph), with node labels cast
     * back to string only at the output boundary — cast(long→string)
     * produces the exact value the string path's input cast did, so
@@ -1465,7 +1417,7 @@ object Corpus {
 
   /** Edge-iterator triangle counts — the intersect form of
     * [[triangleCounts]] (identical output, probed in
-    * `tools/TriangleProbe`): instead of MATERIALIZING the Σ outdeg²
+    * `bench/triangleprobe_r11.txt`): instead of MATERIALIZING the Σ outdeg²
     * wedge set as rows and closing it with a semi-join, each oriented
     * edge (f, t) joins to both endpoints' sorted out-neighbor arrays
     * and a single sorted-merge kernel ([[graft.plans.TriangleContrib]])
@@ -1496,7 +1448,7 @@ object Corpus {
     // identically, so the exchange is built once and REUSED (plan-
     // asserted in PlanSpec); a localCheckpoint here added a serial
     // block-store write+read that measured 2.4x slower cold under a
-    // 24-core hog (72 -> 29 s, tools/TriangleLoadProbe, r12 -- the
+    // 24-core hog (72 -> 29 s, bench/triangleprobe_r12.txt -- the
     // driver-box load-fragility forensics from the r11 verdict)
     val adj = oriented.groupBy(col("__f"))
       .agg(sort_array(collect_list(col("__t"))).as("__ns"))
@@ -3158,7 +3110,7 @@ object Corpus {
     * (group, item) rows twice — once per join side; now each group
     * collects its sorted item list once and emits pairs in place via
     * [[Dedup.pairsFromSorted]], the LSH-bucket shape — multiset-equal
-    * output proven by `tools/PairBuildProbe` (diff 0 on both the raw
+    * output proven by PairBuildProbe@afd7ec7 (diff 0 on both the raw
     * and the weighted form; a<b over a sorted array ≡ the join's
     * `a.__i < b.__i`, null groups/items pair in neither form) and
     * 20–30% faster at sf0.1). The aggregation buffer holds one
@@ -3480,7 +3432,7 @@ object Corpus {
     * the 100 TB path; `exact` runs ONE NARROW count_distinct job per
     * column instead (parquet column pruning — each scans one column;
     * driver folds #columns scalars into literals). Measured at sf0.1
-    * (tools/ProfileProbe): fusing 11 exact count_distincts into the
+    * (bench/profileprobe_r12.txt): fusing 11 exact count_distincts into the
     * single pass makes Catalyst plan an Expand (rows × #columns
     * through one wide shuffle) at 22-27 s, vs 1.8 s base + 3-4 s of
     * per-column jobs for the split form — 4.5× — while the unpivoted

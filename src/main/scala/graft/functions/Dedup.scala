@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions._
   *
   * Scale design: every variant here is expressed so the expensive part
   * is a shuffle on a *small* key (band hash / chunk hash), never an
-  * all-pairs cross join. Exact all-pairs forms exist for oracle
-  * verification at small SF only.
+  * all-pairs cross join. Exact all-pairs forms live in test scope
+  * (`ReferenceForms`), as references for the differential specs.
   *
   * All columnar — higher-order functions stay inside Catalyst codegen;
   * no UDFs.
@@ -19,7 +19,7 @@ object Dedup {
 
   // functions.substring/shiftright take Int literals only; the SQL
   // builtin forms accept column args — call_function reaches them.
-  private def substr(s: Column, pos: Column, len: Int): Column =
+  private[functions] def substr(s: Column, pos: Column, len: Int): Column =
     call_function("substring", s, pos, lit(len))
   private def shr(v: Column, bits: Column): Column =
     call_function("shiftright", v, bits)
@@ -32,18 +32,11 @@ object Dedup {
     * [[graft.plans.CharShingles]] one-pass kernel (r15: the columnar
     * `substring(text, i, n)` walk seeks code-point i from the string
     * START per call — O(len²) byte scans per doc; bit-compat
-    * spec-asserted against [[charShinglesColumnar]]). */
+    * spec-asserted against `ReferenceForms.charShinglesColumnar`). */
   def charShingles(text: Column, n: Int): Column = {
     import org.apache.spark.sql.graft.Bridge
     Bridge.column(graft.plans.CharShingles(Bridge.expression(text), n))
   }
-
-  /** Pre-kernel columnar form — private differential reference for
-    * [[graft.plans.CharShingles]] (bit-equal assertions). */
-  private[graft] def charShinglesColumnar(text: Column, n: Int): Column =
-    array_distinct(transform(
-      sequence(lit(1), greatest(length(text) - (n - 1), lit(1))),
-      i => substr(text, i, n)))
 
   /** Distinct xxhash64 shingle hashes, fused: one pass over the UTF-8
     * buffer, no substring materialization (the scale twin of
@@ -98,34 +91,11 @@ object Dedup {
     * sf0.1 once the census bench tier finally timed it (within-block
     * all-pairs is quadratic in block size, and "blocks small by
     * contract" did not hold for a source column); output is UNCHANGED
-    * (differential-spec'd against the retained naive form). */
+    * (differential-spec'd against the naive form, test-scope
+    * `ReferenceForms.ngramJaccardPairsAllPairs`). */
   def ngramJaccardPairs(df: DataFrame, id: String, text: String, n: Int,
                         threshold: Double, blockBy: Option[String] = None): DataFrame =
     jaccardPairsExact(df, id, text, n, threshold, blockBy = blockBy)
-
-  /** The pre-r13 naive blocked all-pairs form of [[ngramJaccardPairs]],
-    * retained as the differential-spec reference (DedupSpec asserts
-    * output equality with the prefix-filter delegate). Quadratic in
-    * block size — never on a production path. */
-  private[graft] def ngramJaccardPairsAllPairs(df: DataFrame, id: String,
-                                               text: String, n: Int,
-                                               threshold: Double,
-                                               blockBy: Option[String] = None): DataFrame = {
-    val withSh = df.select(Seq(col(id).as("__id"), charShingles(col(text), n).as("__sh")) ++
-      blockBy.map(c => col(c).as("__blk")): _*)
-    val l = withSh.select(Seq(col("__id").as("id_a"), col("__sh").as("sh_a")) ++
-      blockBy.map(_ => col("__blk").as("blk_a")): _*)
-    val r = withSh.select(Seq(col("__id").as("id_b"), col("__sh").as("sh_b")) ++
-      blockBy.map(_ => col("__blk").as("blk_b")): _*)
-    val joined = blockBy match {
-      case Some(_) => l.join(r, col("blk_a") === col("blk_b") && col("id_a") < col("id_b"))
-      case None    => l.join(r, col("id_a") < col("id_b"))
-    }
-    joined
-      .withColumn("jaccard", jaccard(col("sh_a"), col("sh_b")))
-      .where(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
-  }
 
   /** Candidate overlap pairs by shared winnowing fingerprints (the
     * MOSS recipe): each doc explodes to its winnowed fingerprint set
@@ -337,7 +307,7 @@ object Dedup {
     * must be compared byte-wise anyway). The anti-join's build side is
     * the boilerplate set (small; AQE broadcasts it when it fits).
     * A (second-hash, length) prefilter before the exact recount was
-    * probed and REJECTED (tools/RecountProbe, sf0.1, ABBA: 0.95 vs
+    * probed and REJECTED (RecountProbe@afd7ec7, sf0.1, ABBA: 0.95 vs
     * 0.60 s min — 59% slower): hash-repeated rows are true repeats at
     * ~(1 - 2^-64), so the narrow stage eliminates nothing and only
     * adds its own shuffle; it could pay off only under a 64-bit
@@ -364,7 +334,7 @@ object Dedup {
     // same block as its offset-0 twin). Each extra offset runs one
     // more full pass with blocks carved from that token offset — the
     // published boundary fix is a second pass at blockTokens/2.
-    // Measured at sf0.1 (tools/StrideProbe): phase-0 alone deletes
+    // Measured at sf0.1 (StrideProbe@afd7ec7): phase-0 alone deletes
     // 95.3% of the tokens covered by corpus-repeated SLIDING windows;
     // adding the half-stride pass closes the gap (the slight >100% is
     // the trailing-partial-block semantics both passes share).
@@ -374,7 +344,7 @@ object Dedup {
     // passes over raw lineage recomputes the whole upstream plan per
     // consumer. Later passes therefore checkpoint their input — lazily,
     // so materialization folds into the pass's first aggregate
-    // (measured at sf0.1 by tools/StrideTimeProbe: 2.95 -> 2.30 s
+    // (measured at sf0.1 by StrideTimeProbe@afd7ec7: 2.95 -> 2.30 s
     // warm, 7.5 -> 3.4 s cold). Blocks are graft-tagged: sweep with
     // [[releaseMaterialized]] in long-lived sessions, and set a
     // checkpoint dir on a real cluster for reliable (non-executor-
@@ -1386,7 +1356,7 @@ object Dedup {
     * hashes) checksum — order-insensitive, no extra join, and a false
     * fixpoint needs a 2^-64 xor collision AT equal counts.
     *
-    * A/B-measured against min-label propagation (tools/CCProbe): on
+    * A/B-measured against min-label propagation (CCProbe@afd7ec7): on
     * the REAL sf0.1 LSH near-dup pair set (255 pairs, shallow
     * clusters) propagation wins — 1.2-1.3 s vs 2.2 s warm, its
     * one-shuffle rounds beating star's two-phase rounds — so the
@@ -1525,16 +1495,11 @@ object Dedup {
     * hashes → tiny buckets). For low-width keys whose buckets grow
     * with the corpus, a streamed equi-join wins — see
     * [[simhashPairsFromFp]] for the measured trade. */
-  private[functions] def pairsFromSorted(ids: Column): Column =
+  private[graft] def pairsFromSorted(ids: Column): Column =
     flatten(transform(ids, (a, i) =>
       transform(filter(slice(ids, i + lit(2), size(ids) - i - lit(1)),
           b => b =!= a),
         b => struct(a.as("id_a"), b.as("id_b")))))
-
-  /** Probe-only public alias of [[pairsFromSorted]] (tools live
-    * outside the functions package). */
-  private[graft] def pairsFromSortedPublic(ids: Column): Column =
-    pairsFromSorted(ids)
 
   /** Distinct candidate pairs from banded signatures: ONE shuffle — the
     * (band, bandhash) groupBy — collecting each bucket's sorted ids,
@@ -1910,12 +1875,9 @@ object Dedup {
       .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
   }
 
-  /** Candidate stage of [[jaccardPairsCore]], un-materialized —
-    * factored out (r16) so probes can explain/count the REAL candidate
-    * plan (the core eagerly checkpoints it, which hides this segment
-    * from the final frame's formatted explain). `positional` exists
-    * ONLY for the probe's with/without comparison; the core always
-    * passes the default true.
+  /** Candidate stage of [[jaccardPairsCore]], un-materialized (the
+    * core checkpoints it, which hides this segment from the final
+    * frame's formatted explain; bench/jaccardprobe_r16.txt counts it).
     *
     * Positional filter (PPJoin, Xiao et al. 2008 §3.2 — r16): at a
     * matching prefix gram at ranks (ra, rb), every SHARED gram ≥ that
@@ -1930,10 +1892,9 @@ object Dedup {
     * 1e-6 slack convention as the length filter (fp product for set
     * sizes to ~1e9; slack only ADDS candidates). Candidate-volume cut
     * only: stage-1/2 verify semantics untouched. */
-  private[graft] def jaccardCandidates(sets_h: DataFrame, threshold: Double,
-                                       maxDocFreq: Long,
-                                       blockBy: Option[String],
-                                       positional: Boolean = true): DataFrame = {
+  private def jaccardCandidates(sets_h: DataFrame, threshold: Double,
+                                maxDocFreq: Long,
+                                blockBy: Option[String]): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val g = sets_h.select(Seq(col("__jid"), size(col("__hs")).as("__n"),
       explode(col("__hs")).as("__g")) ++
@@ -1963,8 +1924,7 @@ object Dedup {
           (col("__na").cast("double") + col("__nb").cast("double")) -
           lit(1e-6)
     pa.join(pb, joinKeys)
-      .where(col("id_a") < col("id_b") && lengthFilter &&
-        (if (positional) positionalFilter else lit(true)))
+      .where(col("id_a") < col("id_b") && lengthFilter && positionalFilter)
       .select(col("id_a"), col("id_b")).distinct()
   }
 
@@ -2312,7 +2272,7 @@ object Dedup {
     // O(len·w) per doc plus one substring Column object (and, on the
     // md5 tier, a hex conv chain) per gram; the kernel is differential-
     // spec'd equal to the columnar form on both hash tiers
-    // (anchorSitesColumnar below is retained as the spec's reference).
+    // (test-scope ReferenceForms.anchorSitesColumnar is the spec's reference).
     // The generator child stays INLINE (the InferFiltersFromGenerate
     // triple-evaluation trap — see q_decontaminate).
     df.select(col(id).as("__id"), text.as("__t"))
@@ -2320,44 +2280,6 @@ object Dedup {
         Bridge.expression(col("__t")), k, w, byMd5))).as("__a"))
       .select(col("__id"), col("__a.p").as("__pos"), col("__a.h").as("__h"))
   }
-
-  /** The pre-kernel columnar winnowing form — kept PRIVATE[graft] as
-    * the differential-spec reference for [[graft.plans.WinnowAnchors]]
-    * (ExtensionsSpec asserts bit-equal anchor sets on both hash
-    * tiers). O(len·w) slice/compare per doc; production goes through
-    * the kernelized [[anchorSites]]. */
-  private[graft] def anchorSitesColumnar(df: DataFrame, id: String,
-                                         text: Column, k: Int, w: Int,
-                                         byMd5: Boolean): DataFrame = {
-    require(k >= 1 && w >= 2, s"k $k must be >= 1 and w $w >= 2")
-    val gramHash: Column => Column =
-      if (byMd5) md5Gram60 else (g => xxhash64(g))
-    val t = col("__t")
-    val nh = length(t) - (k - 1)
-    val hs = transform(sequence(lit(1), greatest(nh, lit(1))),
-      i => gramHash(substr(t, i, k)))
-    val sitesExpr = zip_with(hs, sequence(lit(1), greatest(nh, lit(1))),
-      (h, p) => struct(h.as("h"), p.as("p")))
-    // the (hash, pos) array MUST land in its own projection and be
-    // referenced more than once downstream: a single-use alias gets
-    // inlined into the windowed-min lambda by CollapseProject, and
-    // every window start then recomputes ALL nh gram hashes —
-    // O(len²·k) per doc (measured 60 s for 500 300-char docs vs <1 s
-    // in this form; the CLAUDE.md columnar-CDC lesson).
-    val sites = col("__sites")
-    val sel = when(size(sites) >= w,
-      array_distinct(transform(
-        sequence(lit(1), size(sites) - (w - 1)),
-        s => array_min(slice(sites, s, lit(w))))))
-      .otherwise(array().cast("array<struct<h:bigint,p:int>>"))
-    df.select(col(id).as("__id"), text.as("__t"))
-      .select(col("__id"), sitesExpr.as("__sites"))
-      .select(col("__id"), explode(sel).as("__a"))
-      .select(col("__id"), col("__a.p").as("__pos"), col("__a.h").as("__h"))
-  }
-
-  private def md5Gram60(g: Column): Column =
-    conv(substring(md5(g), 1, 15), 16, 10).cast("long")
 
   /** Maximal duplicated-span pairs of length >= `minLen` code points,
     * corpus-wide (across docs AND within a doc) — the discovery stage

@@ -630,17 +630,13 @@ object Similarity {
   // IS descending cosine order.
   // ------------------------------------------------------------------
 
-  /** Squared L2 distance between two equal-length double arrays. */
-  private def sqL2(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0.0), _ + _)
-
-  private def vecD(v: Column): Column = transform(v, _.cast("double"))
+  private[functions] def vecD(v: Column): Column = transform(v, _.cast("double"))
 
   /** Codebooks as a nested literal: m → ksub → dsub. Plan-size bound:
     * m·ksub·dsub doubles = one full vector per sub-centroid row
     * (m=8, ksub=256, dim=64 → 16k literals — fine; for very large
     * codebooks persist them and join instead). */
-  private def codebooksLit(cb: Array[Array[Array[Double]]]): Column =
+  private[functions] def codebooksLit(cb: Array[Array[Array[Double]]]): Column =
     array(cb.map(sub => array(sub.map(c =>
       array(c.map(lit).toIndexedSeq: _*)).toIndexedSeq: _*)).toIndexedSeq: _*)
 
@@ -708,22 +704,6 @@ object Similarity {
   def pqEncode(vec: Column, cb: Array[Array[Array[Double]]]): Column =
     Bridge.column(graft.plans.PqEncode(Bridge.expression(vec), cb))
 
-  /** Composable built-ins twin of [[pqEncode]] (codebooks as a nested
-    * literal, `transform`/`slice`/`array_position`) — kept for the
-    * bit-compat differential spec; prefer the kernel: this form's
-    * m·ksub·dsub-literal generated code is Janino-compile-bound. */
-  def pqEncodeColumnar(vec: Column, cb: Array[Array[Array[Double]]]): Column = {
-    val m = cb.length
-    val dsub = cb(0)(0).length
-    val cbl = codebooksLit(cb)
-    val v = vecD(vec)
-    transform(sequence(lit(0), lit(m - 1)), j => {
-      val sub = slice(v, j * dsub + 1, lit(dsub))
-      val dists = transform(element_at(cbl, j + 1), c => sqL2(sub, c))
-      array_position(dists, array_min(dists)).cast("int")
-    })
-  }
-
   /** Reconstruction of a code array (the centroid concatenation) —
     * the decoded approximation of the original vector; exposed for
     * audits (quantization-error measurement) and tests. */
@@ -772,7 +752,7 @@ object Similarity {
     * recall equals shortlist recall, which is far higher than raw ADC
     * rank agreement (measured on the synthetic embeddings, m=16
     * ksub=32: [email protected] raw → 0.94 with a 5× shortlist —
-    * `tools/PqProbe`). The re-rank join BROADCASTS the candidate ids
+    * `bench/pqprobe_r8.txt`). The re-rank join BROADCASTS the candidate ids
     * (|queries|·shortlist rows — small by contract) against the
     * corpus, so the corpus never shuffles; exact scoring is cosine,
     * matching [[bruteForceTopK]]'s output contract — use on
@@ -1323,7 +1303,7 @@ object Similarity {
     * NO nprobe = kLists ≡ [[pqAdcTopK]] identity (codes differ per
     * list by construction) — the differential guarantee is the
     * reconstruction exactness plus the recall floor vs raw codes
-    * pinned in SimilaritySpec (`tools/PqProbe --residual`). Use the
+    * pinned in SimilaritySpec (`bench/pqprobe_r9.txt`). Use the
     * L2-style contract on L2-normalized inputs like the other ADC
     * paths. */
   def ivfPqResidualTopK(corpus: DataFrame, queries: DataFrame, id: String,

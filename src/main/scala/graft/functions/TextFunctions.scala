@@ -114,34 +114,6 @@ object TextFunctions {
       .otherwise(lit(0.39) * (w / s) + lit(11.8) * (sy / w) - lit(15.59))
   }
 
-  // shared run-length entropy fold: H = ln(N) - (sum c*ln(c)) / N in
-  // nats over the element distribution of a SORTED array — each ln
-  // argument is an exact small integer, so the only cross-engine fp
-  // wobble is summation order (collapsed by the caller's round(6), the
-  // collocations recipe). One O(len log len) sort + O(len) fold per
-  // row, zero-shuffle.
-  private def runEntropy(arr: Column): Column = {
-    val sorted = sort_array(arr)
-    val n = size(sorted)
-    val folded = aggregate(sorted,
-      struct(lit("").as("prev"), lit(0L).as("run"), lit(0.0).as("acc")),
-      (st, x) => when(x === st.getField("prev"),
-        struct(st.getField("prev").as("prev"),
-          (st.getField("run") + 1L).as("run"), st.getField("acc").as("acc")))
-        .otherwise(struct(x.as("prev"), lit(1L).as("run"),
-          (st.getField("acc") + when(st.getField("run") > 0,
-            st.getField("run") * log(st.getField("run"))).otherwise(0.0))
-            .as("acc"))),
-      st => st.getField("acc") + when(st.getField("run") > 0,
-        st.getField("run") * log(st.getField("run"))).otherwise(0.0))
-    val h = log(n.cast("double")) - folded / n.cast("double")
-    // entropy is >= 0 mathematically, but the all-equal case computes
-    // ln(n) - (n·ln(n))/n, which lands within an ulp of ±0.0 — clamp
-    // so neither -0.0 nor -1e-16 reaches the output (a -0.0 would
-    // hash-mismatch an oracle's +0.0); mirror the clamp in oracles
-    when(n === 0 || h <= 0.0, lit(0.0)).otherwise(h)
-  }
-
   /** Shannon entropy (nats) of the text's code-point distribution —
     * the gibberish/low-diversity signal (keyboard mash and repeated
     * filler score near 0; natural prose sits in a tight band).
@@ -165,14 +137,6 @@ object TextFunctions {
       overTokens = true))
   }
 
-  /** The pre-kernel columnar entropy forms — kept PRIVATE[graft] as
-    * the differential-spec references for
-    * [[graft.plans.ShannonEntropy]] (bit-equal assertions). */
-  private[graft] def charEntropyColumnar(text: Column): Column =
-    runEntropy(split(text, ""))
-  private[graft] def tokenEntropyColumnar(text: Column): Column =
-    runEntropy(tokens(text))
-
   /** Language ID by stopword voting: score each candidate language by
     * its stopword hits, pick the argmax (deterministic tie-break by
     * list order). N-gram-free heuristic; swap the word lists per
@@ -187,7 +151,7 @@ object TextFunctions {
   def langId(toks: Column, stopwords: Seq[(String, Seq[String])] = defaultStopwords): Column = {
     // r16: one-pass LangVotes kernel — the columnar form ran one
     // interpreted filter() HOF per language over the token array
-    // (bit-compat spec-asserted against langIdColumnar below). A null
+    // (bit-compat spec-asserted against ReferenceForms.langIdColumnar). A null
     // token array yields a null index; the columnar fold returned the
     // FIRST language there (no candidate's null score ever strictly
     // beats the initial) — the coalesce mirrors it.
@@ -196,21 +160,6 @@ object TextFunctions {
       Bridge.expression(toks), stopwords.map(_._2)))
     val langs = array(stopwords.map(p => lit(p._1)): _*)
     coalesce(element_at(langs, idx + lit(1)), lit(stopwords.head._1))
-  }
-
-  /** Pre-kernel columnar form — private differential reference for
-    * [[graft.plans.LangVotes]] (equality assertions incl. ties, null
-    * elements, null/empty arrays). */
-  private[graft] def langIdColumnar(toks: Column,
-      stopwords: Seq[(String, Seq[String])] = defaultStopwords): Column = {
-    val scored = stopwords.map { case (lang, words) =>
-      struct(size(filter(toks, t => t.isin(words: _*))).as("score"), lit(lang).as("lang"))
-    }
-    // left fold keeping the strictly-greater candidate: a language wins
-    // iff its score strictly exceeds every earlier language's score.
-    scored.reduceLeft((best, cand) =>
-      when(cand.getField("score") > best.getField("score"), cand).otherwise(best))
-      .getField("lang")
   }
 
   /** All char trigrams of the lowercased text, per occurrence (not
@@ -263,7 +212,7 @@ object TextFunctions {
     * (#docs × #langs rows, never trigram-level). Argmax = min of the
     * (-score, lang) struct — deterministic lang-ascending tiebreak.
     * Measured 5.1 → 1.2 s at sf0.1 vs the naive
-    * occurrence-explode × langs form (tools/NewQueryProbe). Output:
+    * occurrence-explode × langs form (NewQueryProbe@afd7ec7). Output:
     * (`id`, lang). */
   def langIdNgram(df: DF, id: String, text: Column, profiles: DF): DF =
     langScoreTable(df, id, text, profiles)
@@ -359,18 +308,9 @@ object TextFunctions {
     // one-pass kernel (r15): the columnar fold below seeks each code
     // point from the string start (substring is not random-access on
     // UTF-8) — O(len²) byte scans per document; bit-compat is
-    // spec-asserted against [[fingerprintColumnar]]
+    // spec-asserted against ReferenceForms.fingerprintColumnar
     Bridge.column(graft.plans.Fingerprint(Bridge.expression(text)))
   }
-
-  /** Pre-kernel columnar form — private differential reference for
-    * [[graft.plans.Fingerprint]] (bit-equal assertions). */
-  private[graft] def fingerprintColumnar(text: Column): Column =
-    aggregate(
-      transform(sequence(lit(1), greatest(length(text), lit(1))),
-        i => call_function("ascii", call_function("substring", text, i, lit(1))).cast("long")),
-      lit(0L),
-      (acc, c) => (acc * 31L + c) % 1000000007L)
 
   /** Shared winnowing selector: per-position k-gram hashes, then the
     * minimum VALUE in each sliding window of `w` hashes, distinct and
@@ -449,7 +389,8 @@ object TextFunctions {
     * Behavior note (r15 kernel switch): negative `overlap` (step >
     * chunkSize, gapped chunking) now throws where the old columnar
     * form produced degenerate gapped output; no call site ever passed
-    * one — use [[chunkTokensColumnar]]'s shape directly if gapped
+    * one — the columnar shape (test-scope
+    * `ReferenceForms.chunkTokensColumnar`) is the model if gapped
     * chunking is ever wanted. */
   def chunkTokens(toks: Column, chunkSize: Int, overlap: Int = 0): Column = {
     require(overlap < chunkSize, "overlap must be < chunkSize")
@@ -458,21 +399,10 @@ object TextFunctions {
     // r15: strided TokenGrams kernel — the columnar HOF form
     // re-evaluated the captured computed `toks` once per chunk
     // (O(len²/step) bytes per doc; bit-compat spec-asserted against
-    // chunkTokensColumnar)
+    // ReferenceForms.chunkTokensColumnar)
     import org.apache.spark.sql.graft.Bridge
     Bridge.column(graft.plans.TokenGrams(Bridge.expression(toks),
       chunkSize, step))
-  }
-
-  /** Pre-kernel columnar form — private differential reference for
-    * the strided [[graft.plans.TokenGrams]] (bit-equal assertions). */
-  private[graft] def chunkTokensColumnar(toks: Column, chunkSize: Int,
-                                         overlap: Int = 0): Column = {
-    require(overlap < chunkSize, "overlap must be < chunkSize")
-    val step = chunkSize - overlap
-    transform(
-      sequence(lit(1), greatest(size(toks) - overlap, lit(1)), lit(step)),
-      i => concat_ws(" ", slice(toks, i, lit(chunkSize))))
   }
 
   /** Count of code points belonging to the given Unicode script
@@ -702,7 +632,7 @@ object TextFunctions {
     * (short) gram → fraction 1.0. */
   /** Per-position (NON-dedup) word n-grams of a token array — rides
     * the [[graft.plans.TokenGrams]] kernel. The columnar HOF form
-    * ([[positionalGramsColumnar]], kept as the differential-spec
+    * (`ReferenceForms.positionalGramsColumnar`, the differential-spec
     * reference) re-evaluates the captured `toks` EXPRESSION once per
     * gram position when the caller passes a computed column
     * (`tokens(text)` at every current call site) — interpreted HOFs
@@ -714,12 +644,6 @@ object TextFunctions {
     import org.apache.spark.sql.graft.Bridge
     Bridge.column(graft.plans.TokenGrams(Bridge.expression(toks), n))
   }
-
-  /** Pre-kernel HOF form — private differential reference for
-    * [[graft.plans.TokenGrams]] (bit-equal assertions). */
-  private[graft] def positionalGramsColumnar(toks: Column, n: Int): Column =
-    transform(sequence(lit(1), greatest(size(toks) - (n - 1), lit(1))),
-      i => concat_ws(" ", slice(toks, i, lit(n))))
 
   def topNgramFraction(df: org.apache.spark.sql.DataFrame, id: Column, toks: Column,
                        n: Int): org.apache.spark.sql.DataFrame = {
@@ -782,10 +706,10 @@ object TextFunctions {
     * their single short gram. Distinct-counting `xxhash64(gram)`
     * instead of the gram string (narrower expand shuffle) was probed
     * and REJECTED — measured neutral at sf0.1 (3.14 vs 3.20 s mins,
-    * sign flips across runs; `tools/DiversityProbe`,
-    * bench/diversityprobe_r9.txt): count_distinct's partial
-    * aggregation already dedups map-side before the shuffle, so the
-    * narrower key saves nothing and would add a collision caveat.
+    * sign flips across runs; bench/diversityprobe_r9.txt):
+    * count_distinct's partial aggregation already dedups map-side
+    * before the shuffle, so the narrower key saves nothing and would
+    * add a collision caveat.
     * Output: (keys..., n_grams, n_distinct, diversity rounded 6). */
   def ngramDiversity(df: DF, keys: Seq[String], toks: Column,
                      n: Int): DF = {

@@ -21,8 +21,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * — exactly the columnar fold's "candidate wins only on strictly
   * greater score" rule.
   *
-  * Bit-compat contract (spec-asserted vs the kept
-  * `langIdColumnar` reference):
+  * Bit-compat contract (spec-asserted vs the test-scope
+  * `ReferenceForms.langIdColumnar`):
   *  - returns the 0-based index of the winning language list;
   *  - ties (including the all-zero empty/no-hit case) go to the
   *    LOWEST index (= the columnar reduceLeft's earlier-entry wins);

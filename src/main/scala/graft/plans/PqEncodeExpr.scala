@@ -10,7 +10,7 @@ import org.apache.spark.sql.types._
   * m 1-based sub-centroid codes (nearest by squared L2 per subspace).
   *
   * The composable twin (`transform`/`slice`/`array_position` over a
-  * nested codebook literal — `Similarity.pqEncodeColumnar`) generates
+  * nested codebook literal — test-scope `ReferenceForms.pqEncodeColumnar`) generates
   * enormous Janino code (m·ksub·dsub inlined literals) whose COMPILE
   * time dominates small jobs and whose per-row allocation pattern
   * (sliced sub-arrays, distance arrays) taxes large ones. This

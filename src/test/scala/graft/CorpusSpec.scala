@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.{Corpus, Dedup}
+import graft.functions.{Corpus, Dedup, ReferenceForms}
 import org.apache.spark.sql.DataFrame
 
 class CorpusSpec extends AnyFunSuite {
@@ -1074,12 +1074,12 @@ class CorpusSpec extends AnyFunSuite {
     } yield a).groupBy(identity).map { case (n, g) => n -> g.size.toLong }
     assert(run(redges, parts = 7) == want)
     // the retained wedge form stays output-identical to the intersect
-    // default (the r11 probe invariant — tools/TriangleProbe)
-    val wedge = Corpus.triangleCountsWedge(
+    // default (the r11 probe invariant — bench/triangleprobe_r11.txt)
+    val wedge = ReferenceForms.triangleCountsWedge(
         redges.toDF("s", "d").repartition(7), col("s"), col("d"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(wedge == want)
-    assert(Corpus.triangleCountsWedge(noisy.toDF("s", "d"), col("s"), col("d"))
+    assert(ReferenceForms.triangleCountsWedge(noisy.toDF("s", "d"), col("s"), col("d"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap == run(share))
   }
 

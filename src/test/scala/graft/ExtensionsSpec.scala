@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.{Dedup, Multimodal, Similarity, TextFunctions}
+import graft.functions.{Dedup, Multimodal, ReferenceForms, Similarity, TextFunctions}
 
 class DedupSpec extends AnyFunSuite {
   val spark = TestSpark.spark
@@ -77,7 +77,7 @@ class DedupSpec extends AnyFunSuite {
       // reference = the retained naive all-pairs form (ngramJaccardPairs
       // itself DELEGATES to the prefix machinery since r13 — using it
       // here would compare the operator to itself)
-      val want = Dedup.ngramJaccardPairsAllPairs(df, "id", "s", 5, t)
+      val want = ReferenceForms.ngramJaccardPairsAllPairs(df, "id", "s", 5, t)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
         .toSet
       val got = Dedup.jaccardPairsExact(df, "id", "s", 5, t)
@@ -93,7 +93,7 @@ class DedupSpec extends AnyFunSuite {
       (i, s0, if (i % 2 == 0) "b0" else "b1")
     }.toDF("id", "s", "blk").repartition(5)
     for (t <- Seq(0.5, 0.9)) {
-      val wantB = Dedup.ngramJaccardPairsAllPairs(blocked, "id", "s", 5, t,
+      val wantB = ReferenceForms.ngramJaccardPairsAllPairs(blocked, "id", "s", 5, t,
           blockBy = Some("blk"))
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
       val gotB = Dedup.ngramJaccardPairs(blocked, "id", "s", 5, t,
@@ -315,7 +315,7 @@ class DedupSpec extends AnyFunSuite {
     for (n <- Seq(1, 2, 3, 5)) {
       df.select(
           kernel(TextFunctions.tokens($"text"), n).as("k"),
-          TextFunctions.positionalGramsColumnar(
+          ReferenceForms.positionalGramsColumnar(
             TextFunctions.tokens($"text"), n).as("c"))
         .collect().foreach { r =>
           assert(r.getSeq[String](0) == r.getSeq[String](1), s"n=$n")
@@ -327,7 +327,7 @@ class DedupSpec extends AnyFunSuite {
       "SELECT array('a', CAST(NULL AS STRING), 'b', NULL, 'c') AS ts " +
       "UNION ALL SELECT array(CAST(NULL AS STRING), NULL)")
     withNulls.select(kernel($"ts", 2).as("k"),
-        TextFunctions.positionalGramsColumnar($"ts", 2).as("c"))
+        ReferenceForms.positionalGramsColumnar($"ts", 2).as("c"))
       .collect().foreach(r =>
         assert(r.getSeq[String](0) == r.getSeq[String](1)))
     // randomized small-alphabet docs (duplicate grams must KEEP their
@@ -337,7 +337,7 @@ class DedupSpec extends AnyFunSuite {
       (1 to rnd.nextInt(60)).map(_ => "ab \t"(rnd.nextInt(4))).mkString)
       .toDF("text")
     docs.select(kernel(TextFunctions.tokens($"text"), 3).as("k"),
-        TextFunctions.positionalGramsColumnar(
+        ReferenceForms.positionalGramsColumnar(
           TextFunctions.tokens($"text"), 3).as("c"))
       .collect().foreach(r =>
         assert(r.getSeq[String](0) == r.getSeq[String](1)))
@@ -349,7 +349,7 @@ class DedupSpec extends AnyFunSuite {
     for ((cs, ov) <- Seq((32, 8), (5, 2), (4, 0), (3, 2))) {
       longDocs.select(
           TextFunctions.chunkTokens(TextFunctions.tokens($"text"), cs, ov).as("k"),
-          TextFunctions.chunkTokensColumnar(
+          ReferenceForms.chunkTokensColumnar(
             TextFunctions.tokens($"text"), cs, ov).as("c"))
         .collect().foreach { r =>
           assert(r.getSeq[String](0) == r.getSeq[String](1), s"cs=$cs ov=$ov")
@@ -368,7 +368,7 @@ class DedupSpec extends AnyFunSuite {
     ).toDF("text")
     for (n <- Seq(1, 3, 5)) {
       df.select(Dedup.charShingles($"text", n).as("k"),
-          Dedup.charShinglesColumnar($"text", n).as("c"))
+          ReferenceForms.charShinglesColumnar($"text", n).as("c"))
         .collect().foreach { r =>
           assert(r.getSeq[String](0) == r.getSeq[String](1), s"n=$n")
         }
@@ -378,7 +378,7 @@ class DedupSpec extends AnyFunSuite {
       (1 to rnd.nextInt(60)).map(_ => "abé日 "(rnd.nextInt(5))).mkString)
       .toDF("text")
     docs.select(Dedup.charShingles($"text", 5).as("k"),
-        Dedup.charShinglesColumnar($"text", 5).as("c"))
+        ReferenceForms.charShinglesColumnar($"text", 5).as("c"))
       .collect().foreach(r =>
         assert(r.getSeq[String](0) == r.getSeq[String](1)))
   }
@@ -396,14 +396,14 @@ class DedupSpec extends AnyFunSuite {
       " ", "long " * 50
     ).toDF("text")
     df.select(TextFunctions.fingerprint($"text").as("k"),
-        TextFunctions.fingerprintColumnar($"text").as("c"))
+        ReferenceForms.fingerprintColumnar($"text").as("c"))
       .collect().foreach(r => assert(r.getLong(0) == r.getLong(1), r))
     val rnd = new scala.util.Random(44)
     val docs = (1 to 20).map(_ =>
       (1 to rnd.nextInt(80)).map(_ => "abé日 \t"(rnd.nextInt(6))).mkString)
       .toDF("text")
     docs.select(TextFunctions.fingerprint($"text").as("k"),
-        TextFunctions.fingerprintColumnar($"text").as("c"))
+        ReferenceForms.fingerprintColumnar($"text").as("c"))
       .collect().foreach(r => assert(r.getLong(0) == r.getLong(1), r))
   }
 
@@ -967,7 +967,7 @@ class DedupSpec extends AnyFunSuite {
     val got = lsh.collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
     assert(exact.subsetOf(got.keySet)) // full recall on true near-dups
     // estimate within ~0.15 of exact for the engineered pair
-    val trueJ = Dedup.ngramJaccardPairsAllPairs(docs, "id", "text", 3, 0.0)
+    val trueJ = ReferenceForms.ngramJaccardPairsAllPairs(docs, "id", "text", 3, 0.0)
       .where($"id_a" === 1 && $"id_b" === 2).head().getDouble(2)
     assert(math.abs(got((1L, 2L)) - trueJ) < 0.15)
   }
@@ -1101,7 +1101,7 @@ class DedupSpec extends AnyFunSuite {
     for (byMd5 <- Seq(false, true); (k, w) <- Seq((5, 6), (12, 14), (2, 2))) {
       val viaKernel = Dedup.anchorSites(fixture, "id", col("text"), k, w, byMd5)
         .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-      val viaColumnar = Dedup.anchorSitesColumnar(fixture, "id", col("text"), k, w, byMd5)
+      val viaColumnar = ReferenceForms.anchorSitesColumnar(fixture, "id", col("text"), k, w, byMd5)
         .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
       assert(viaKernel == viaColumnar,
         s"byMd5=$byMd5 k=$k w=$w: kernel ${viaKernel.size} != columnar ${viaColumnar.size}\n" +
@@ -1116,7 +1116,7 @@ class DedupSpec extends AnyFunSuite {
       }.toDF("id", "text")
       val viaKernel = Dedup.anchorSites(docs, "id", col("text"), 4, 5, byMd5 = false)
         .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-      val viaColumnar = Dedup.anchorSitesColumnar(docs, "id", col("text"), 4, 5, byMd5 = false)
+      val viaColumnar = ReferenceForms.anchorSitesColumnar(docs, "id", col("text"), 4, 5, byMd5 = false)
         .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
       assert(viaKernel == viaColumnar, s"seed=$seed")
     }
@@ -2174,7 +2174,7 @@ class SimilaritySpec extends AnyFunSuite {
     assert(codes == codes2)
     // fused kernel is bit-compatible with the columnar built-ins twin
     val columnar = emb
-      .select($"vec_id", Similarity.pqEncodeColumnar($"embedding", cb).as("c"))
+      .select($"vec_id", ReferenceForms.pqEncodeColumnar($"embedding", cb).as("c"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
     assert(codes == columnar)
   }
@@ -2270,7 +2270,7 @@ class SimilaritySpec extends AnyFunSuite {
     assert(ivf == full)
     // recall sanity vs exact cosine on L2-normalized vectors (where
     // ascending L2 = descending cosine). Deterministic — thresholds
-    // pinned below the tools/PqProbe measurements (raw ADC 0.50,
+    // pinned below the bench/pqprobe_r8.txt measurements (raw ADC 0.50,
     // 5×-shortlist re-rank 0.94 at m=16 ksub=32 on this data).
     val n = emb.select($"vec_id",
       transform($"embedding", x => x / sqrt(aggregate(
@@ -2339,7 +2339,7 @@ class SimilaritySpec extends AnyFunSuite {
       assert(math.abs(adist - wd) < 1e-6, s"$k: adist $adist vs direct $wd")
     }
     // recall vs the raw-code IVF-PQ at the same budget (normalized
-    // vectors; tools/PqProbe r9 at sf0.01: residual 0.520 vs raw 0.475
+    // vectors; bench/pqprobe_r9.txt at sf0.01: residual 0.520 vs raw 0.475
     // at kLists=8 m=16 ksub=32 nprobe=8 — at-or-above raw in 6/8
     // configs). The pinned guarantee is "residual does not collapse
     // vs raw": small-sample noise means a strict >= does not hold
@@ -2614,8 +2614,8 @@ class TextFunctionsSpec extends AnyFunSuite {
     // kernel == columnar run-length fold BIT-FOR-BIT (same sorted
     // accumulation order, same Math.log) — incl. supplementary chars
     val viaColumnar = df.select($"id",
-        TextFunctions.charEntropyColumnar($"t").as("ce"),
-        TextFunctions.tokenEntropyColumnar($"t").as("te"))
+        ReferenceForms.charEntropyColumnar($"t").as("ce"),
+        ReferenceForms.tokenEntropyColumnar($"t").as("te"))
       .collect().map(r => r.getLong(0) -> (r.getDouble(1), r.getDouble(2))).toMap
     texts.indices.foreach { i =>
       val (kc, kt) = got(i.toLong)
@@ -2828,13 +2828,13 @@ class TextFunctionsSpec extends AnyFunSuite {
     ).toDF("text")
     val toks = TextFunctions.tokens($"text")
     df.select(TextFunctions.langId(toks).as("k"),
-        TextFunctions.langIdColumnar(toks).as("c"))
+        ReferenceForms.langIdColumnar(toks).as("c"))
       .collect().foreach(r => assert(r.getString(0) == r.getString(1), r))
     // null ELEMENTS vote for nothing in both forms
     val arrDf = Seq(Tuple1(Seq[String]("the", null, "la", null)))
       .toDF("toks")
     arrDf.select(TextFunctions.langId($"toks").as("k"),
-        TextFunctions.langIdColumnar($"toks").as("c"))
+        ReferenceForms.langIdColumnar($"toks").as("c"))
       .collect().foreach(r => assert(r.getString(0) == r.getString(1), r))
     // randomized cross-check over the default lists' vocabulary
     val vocab = TextFunctions.defaultStopwords.flatMap(_._2) ++
@@ -2846,7 +2846,7 @@ class TextFunctionsSpec extends AnyFunSuite {
     }.toDF("text")
     val rtoks = TextFunctions.tokens($"text")
     rndDf.select(TextFunctions.langId(rtoks).as("k"),
-        TextFunctions.langIdColumnar(rtoks).as("c"))
+        ReferenceForms.langIdColumnar(rtoks).as("c"))
       .collect().foreach(r => assert(r.getString(0) == r.getString(1), r))
   }
 
@@ -4775,9 +4775,20 @@ class EntrySpec extends AnyFunSuite {
       }
     }
     assert(nonAtomic.isEmpty, s"non-atomic final columns: ${nonAtomic.mkString(", ")}")
-    // every oracle key has a query
-    assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
-    // bench queries exist
+    // census-complete: every query has an oracle and every oracle a query
+    val q = SparkEntry.queries.keySet
+    assert(SparkEntry.oracleSql.keySet == q,
+      s"missing oracle: ${(q -- SparkEntry.oracleSql.keySet).toSeq.sorted}; " +
+      s"oracle without query: ${(SparkEntry.oracleSql.keySet -- q).toSeq.sorted}")
+    // bench tier names exist
     assert(SparkEntry.benchQueries.forall(SparkEntry.queries.contains))
+    assert(SparkEntry.benchQueriesV2.forall(SparkEntry.queries.contains),
+      s"unknown v2 names: ${SparkEntry.benchQueriesV2.filterNot(SparkEntry.queries.contains)}")
+    // the series tiers and v3 partition the queries
+    val series = (SparkEntry.benchQueries ++ SparkEntry.benchQueriesV2).toSet
+    val v3 = SparkEntry.benchQueriesV3.toSet
+    assert((series intersect v3).isEmpty, s"in series and v3: ${(series intersect v3).toSeq.sorted}")
+    assert((series union v3) == q,
+      s"untimed: ${(q -- series -- v3).toSeq.sorted}; not queries: ${((series union v3) -- q).toSeq.sorted}")
   }
 }
