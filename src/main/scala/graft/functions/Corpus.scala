@@ -927,8 +927,8 @@ object Corpus {
     * id-like keys; the fallback on a miss is the always-correct
     * shuffled join. */
   private val maxStateBroadcastBytes: Double = (256L << 20).toDouble
-  private[functions] def stateBroadcastOk(rows: Double, avgKeyChars: Double,
-                                          maxRows: Long): Boolean =
+  private def stateBroadcastOk(rows: Double, avgKeyChars: Double,
+                               maxRows: Long): Boolean =
     rows <= maxRows.toDouble &&
       rows * (avgKeyChars + 48.0) <= maxStateBroadcastBytes
 
@@ -1313,8 +1313,7 @@ object Corpus {
     * self-loops dropped, directions/duplicates merged, every edge
     * pointed from its lower-(degree, node) endpoint — an acyclic
     * orientation with O(√m) max out-degree. Materialized (it feeds 2+
-    * joins downstream); carries the target degree `__dt` for the wedge
-    * reference's ordering filter. */
+    * joins downstream). Output: (__f, __t). */
   private[functions] def orientEdges(edges: DataFrame, src: Column,
                                      dst: Column): DataFrame = {
     // Auto key type: both triangle forms' outputs are
@@ -1411,8 +1410,7 @@ object Corpus {
           struct(col("__u").as("f"), col("__v").as("t")))
           .otherwise(struct(col("__v").as("f"), col("__u").as("t")))
           .as("__e"))
-      .select(col("__e.f").as("__f"), col("__e.t").as("__t"))
-      .join(deg.select(col("__n").as("__t"), col("__d").as("__dt")), "__t"))
+      .select(col("__e.f").as("__f"), col("__e.t").as("__t")))
   }
 
   /** Edge-iterator triangle counts — the intersect form of

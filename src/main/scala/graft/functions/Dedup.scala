@@ -1892,9 +1892,9 @@ object Dedup {
     * 1e-6 slack convention as the length filter (fp product for set
     * sizes to ~1e9; slack only ADDS candidates). Candidate-volume cut
     * only: stage-1/2 verify semantics untouched. */
-  private def jaccardCandidates(sets_h: DataFrame, threshold: Double,
-                                maxDocFreq: Long,
-                                blockBy: Option[String]): DataFrame = {
+  private[graft] def jaccardCandidates(sets_h: DataFrame, threshold: Double,
+                                       maxDocFreq: Long,
+                                       blockBy: Option[String]): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val g = sets_h.select(Seq(col("__jid"), size(col("__hs")).as("__n"),
       explode(col("__hs")).as("__g")) ++

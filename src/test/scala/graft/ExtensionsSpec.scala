@@ -4784,11 +4784,9 @@ class EntrySpec extends AnyFunSuite {
     assert(SparkEntry.benchQueries.forall(SparkEntry.queries.contains))
     assert(SparkEntry.benchQueriesV2.forall(SparkEntry.queries.contains),
       s"unknown v2 names: ${SparkEntry.benchQueriesV2.filterNot(SparkEntry.queries.contains)}")
-    // the series tiers and v3 partition the queries
-    val series = (SparkEntry.benchQueries ++ SparkEntry.benchQueriesV2).toSet
-    val v3 = SparkEntry.benchQueriesV3.toSet
-    assert((series intersect v3).isEmpty, s"in series and v3: ${(series intersect v3).toSeq.sorted}")
-    assert((series union v3) == q,
-      s"untimed: ${(q -- series -- v3).toSeq.sorted}; not queries: ${((series union v3) -- q).toSeq.sorted}")
+    // the two series tiers are disjoint (benchQueriesV3 is derived as
+    // the rest of the registry, so it needs no check of its own)
+    val both = SparkEntry.benchQueries.intersect(SparkEntry.benchQueriesV2)
+    assert(both.isEmpty, s"in both series tiers: ${both.sorted}")
   }
 }

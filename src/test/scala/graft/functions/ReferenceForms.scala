@@ -47,9 +47,8 @@ object ReferenceForms {
     * ([[TextFunctions.langId]]): one stopword-hit score per language, a
     * left fold keeping the strictly-greater candidate, so an earlier
     * language wins ties. */
-  def langIdColumnar(toks: Column,
-      stopwords: Seq[(String, Seq[String])] = TextFunctions.defaultStopwords): Column = {
-    val scored = stopwords.map { case (lang, words) =>
+  def langIdColumnar(toks: Column): Column = {
+    val scored = TextFunctions.defaultStopwords.map { case (lang, words) =>
       struct(size(filter(toks, t => t.isin(words: _*))).as("score"), lit(lang).as("lang"))
     }
     scored.reduceLeft((best, cand) =>
@@ -183,29 +182,20 @@ object ReferenceForms {
     * Vassilvitskii 2011), wedges from ONE self-equi-join of the oriented
     * list on the apex (Σ outdeg² rows), closed by ONE more equi-join.
     * Each triangle materializes exactly once (at its lowest-rank apex),
-    * then explodes to its 3 corners. The closing side is broadcast
-    * under the row cap `maxBroadcastCloseEdges` and the byte estimate;
-    * above it the semi-join shuffles every wedge. */
-  def triangleCountsWedge(edges: DataFrame, src: Column, dst: Column,
-                          maxBroadcastCloseEdges: Long = 8000000L): DataFrame = {
+    * then explodes to its 3 corners. */
+  def triangleCountsWedge(edges: DataFrame, src: Column, dst: Column): DataFrame = {
     val oriented = Corpus.orientEdges(edges, src, dst)
-    val w1 = oriented.select(col("__f"), col("__t").as("__b"),
-      col("__dt").as("__db"))
-    val w2 = oriented.select(col("__f"), col("__t").as("__c"),
-      col("__dt").as("__dc"))
-    val keyWidthW =
-      if (oriented.schema("__f").dataType ==
-          org.apache.spark.sql.types.StringType)
-        coalesce(avg(length(col("__f")) + length(col("__t"))), lit(0.0))
-      else lit(16.0)
-    val estats = oriented.agg(count(lit(1)), keyWidthW).head()
-    val small = Corpus.stateBroadcastOk(estats.getLong(0).toDouble,
-      estats.getDouble(1), maxBroadcastCloseEdges)
-    def hinted(df: DataFrame) = if (small) broadcast(df) else df
-    val wedges = w1.join(hinted(w2), "__f")
+    // undirected degree: each canonical edge appears once, oriented
+    val deg = oriented.select(col("__f").as("__n"))
+      .union(oriented.select(col("__t").as("__n")))
+      .groupBy(col("__n")).agg(count(lit(1)).as("__d"))
+    val od = oriented.join(deg.select(col("__n").as("__t"), col("__d").as("__dt")), "__t")
+    val w1 = od.select(col("__f"), col("__t").as("__b"), col("__dt").as("__db"))
+    val w2 = od.select(col("__f"), col("__t").as("__c"), col("__dt").as("__dc"))
+    val wedges = w1.join(w2, "__f")
       .where(struct(col("__db"), col("__b")) < struct(col("__dc"), col("__c")))
     val closing = oriented.select(col("__f").as("__b"), col("__t").as("__c"))
-    val tris = wedges.join(hinted(closing), Seq("__b", "__c"), "left_semi")
+    val tris = wedges.join(closing, Seq("__b", "__c"), "left_semi")
       .select(col("__f"), col("__b"), col("__c"))
     tris.select(explode(array(col("__f"), col("__b"), col("__c"))).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("triangles"))
